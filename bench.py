@@ -105,7 +105,7 @@ def run_cdc_replay(spark, n_events: int, n_keys: int, n_chunks: int, workdir: st
         # single-shuffle plan folds LWW into the write job itself (no
         # separate lww_ms) — so "write" is the whole distributed apply job
         # and "other" is manifest/state bookkeeping + driver time.  Non-zero
-        # stats/lww values appear only on the unordered or broadcast paths.
+        # stats/lww values appear only on the unordered path or merge().
         ms = {"stats": 0.0, "lww_lineage": 0.0, "write": 0.0}
         for r in results:
             ms["stats"] += r.get("stats_ms", 0.0)

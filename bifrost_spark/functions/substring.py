@@ -183,6 +183,11 @@ def _scrub_kernel(min_tokens: int):
     return kern
 
 
+# the doc-id key of the internal (id, pos, key) rows: a reserved name, so the
+# join back to ``docs`` stays unambiguous whatever ``id_col`` is called
+_COV_ID = "__cov_id"
+
+
 def exact_substring_scrub(
     docs: DataFrame,
     text_col: str = "text",
@@ -202,10 +207,10 @@ def exact_substring_scrub(
     docs = spread_for_compute(docs)
     if hash_fn == "poly":
         kern = _window_keys_poly(min_tokens)
-        keyed = docs.select(F.col(id_col).alias("id"), kern(F.col(text_col)).alias("wk"))
+        keyed = docs.select(F.col(id_col).alias(_COV_ID), kern(F.col(text_col)).alias("wk"))
     else:
         keyed = docs.select(
-            F.col(id_col).alias("id"),
+            F.col(id_col).alias(_COV_ID),
             _window_keys_xx(F.col(text_col), min_tokens).alias("wk"),
         )
     # narrow (id, pos, key) rows — consumed twice (global count + cover
@@ -214,7 +219,7 @@ def exact_substring_scrub(
     # a non-outer Generate with an inferred size(wk)>0 pre-filter that
     # re-evaluates the kernel, doubling the window pass (plan-audited).
     wins = register_cache(
-        keyed.select("id", F.posexplode_outer("wk").alias("pos", "key"))
+        keyed.select(_COV_ID, F.posexplode_outer("wk").alias("pos", "key"))
         .filter(F.col("key").isNotNull())
     )
     dup = (
@@ -222,11 +227,11 @@ def exact_substring_scrub(
         .filter(F.col("count") >= min_count)
         .select("key")
     )
-    covered = wins.join(dup, "key").select("id", "pos")
-    starts = covered.groupBy("id").agg(F.collect_list("pos").alias("starts"))
+    covered = wins.join(dup, "key").select(_COV_ID, "pos")
+    starts = covered.groupBy(_COV_ID).agg(F.collect_list("pos").alias("starts"))
     scrub = _scrub_kernel(min_tokens)
     out = (
-        docs.join(starts, docs[id_col] == starts["id"], "left")
+        docs.join(starts, docs[id_col] == starts[_COV_ID], "left")
         .select(F.col(id_col), scrub(F.col(text_col), F.col("starts")).alias("r"))
         .select(
             id_col,

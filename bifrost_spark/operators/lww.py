@@ -99,8 +99,15 @@ def events_to_ops(events: DataFrame) -> DataFrame:
     )
 
 
-def resolve_lww(ops: DataFrame, strategy: str = "agg", n_salts: int = 16) -> DataFrame:
-    """Collapse ops to at most one terminal op per PK (latest seq wins).
+def resolve_lww(ops: DataFrame, strategy: str = "agg", n_salts: int = 16,
+                keys: list[str] | None = None, payload: list[str] | None = None) -> DataFrame:
+    """Collapse ops to at most one terminal op per key (latest seq wins).
+
+    ``keys`` are the grouping columns (default the PK) and ``payload`` the
+    columns carried from the winning op (default op, ``OP_PAYLOAD``,
+    event_id, schema_version); the result is keys + payload + ``seq``.
+    ``TargetTable.apply_ops`` runs its one merge aggregate through here with
+    keys ``(bucket, *PK)`` and the table's current columns as payload.
 
     ``strategy``:
       - ``agg`` (default): one-pass ``max_by(payload_struct, seq)``.
@@ -115,7 +122,7 @@ def resolve_lww(ops: DataFrame, strategy: str = "agg", n_salts: int = 16) -> Dat
         already materialized (cached/checkpointed) AND payloads are wide;
         measured at 8M cached ops × ~400B rows it LOSES to ``agg``
         (2.0s vs 0.9s at local[32]) — kept as the option it is, with the
-        measurement, not the theory, in charge.  Requires ``(pk, seq)``
+        measurement, not the theory, in charge.  Requires ``(key, seq)``
         unique, which ``events_to_ops`` guarantees.
       - ``window``: row_number() == 1 — the literal translation of
         mysql_normal_sync.go's reverse scan; shuffles all rows per key.
@@ -123,34 +130,34 @@ def resolve_lww(ops: DataFrame, strategy: str = "agg", n_salts: int = 16) -> Dat
         (SURVEY.md §4 custom-work item 4).
     All strategies return identical results (property-tested).
     """
-    val = F.struct(*[F.col(c) for c in ["op", *OP_PAYLOAD, "event_id", "schema_version"]])
+    keys = list(PK_COLUMNS) if keys is None else list(keys)
+    payload = ["op", *OP_PAYLOAD, "event_id", "schema_version"] if payload is None else list(payload)
+    out_cols = [*keys, *payload, "seq"]
     if strategy == "hash":
-        winners = ops.groupBy(*PK_COLUMNS).agg(F.max("seq").alias("_wseq")).hint("shuffle_hash")
+        winners = ops.groupBy(*keys).agg(F.max("seq").alias("_wseq")).hint("shuffle_hash")
         cond = (ops["seq"] == winners["_wseq"])
-        for c in PK_COLUMNS:
+        for c in keys:
             cond = cond & (ops[c] == winners[c])
-        return ops.join(winners, on=cond, how="left_semi").select(
-            *PK_COLUMNS, "op", *OP_PAYLOAD, "event_id", "schema_version", "seq"
-        )
+        return ops.join(winners, on=cond, how="left_semi").select(*out_cols)
     if strategy == "agg":
-        out = ops.groupBy(*PK_COLUMNS).agg(F.max_by(val, F.col("seq")).alias("v"), F.max("seq").alias("seq"))
-        return out.select(*PK_COLUMNS, "v.*", "seq")
+        val = F.struct(*payload)
+        out = ops.groupBy(*keys).agg(F.max_by(val, F.col("seq")).alias("v"), F.max("seq").alias("seq"))
+        return out.select(*keys, "v.*", "seq")
     if strategy == "window":
-        w = Window.partitionBy(*PK_COLUMNS).orderBy(F.desc("seq"))
+        w = Window.partitionBy(*keys).orderBy(F.desc("seq"))
         return (
             ops.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .select(*PK_COLUMNS, "op", *OP_PAYLOAD, "event_id", "schema_version", "seq")
+            .select(*out_cols)
         )
     if strategy == "salted_window":
         salted = ops.withColumn("_salt", F.pmod(F.xxhash64("seq"), F.lit(n_salts)))
-        w1 = Window.partitionBy(*PK_COLUMNS, "_salt").orderBy(F.desc("seq"))
+        w1 = Window.partitionBy(*keys, "_salt").orderBy(F.desc("seq"))
         within = salted.withColumn("_rn", F.row_number().over(w1)).filter(F.col("_rn") == 1).drop("_rn")
-        w2 = Window.partitionBy(*PK_COLUMNS).orderBy(F.desc("seq"))
+        w2 = Window.partitionBy(*keys).orderBy(F.desc("seq"))
         return (
             within.withColumn("_rn", F.row_number().over(w2))
             .filter(F.col("_rn") == 1)
-            .select(*PK_COLUMNS, "op", *OP_PAYLOAD, "event_id", "schema_version", "seq")
+            .select(*out_cols)
         )
     raise ValueError(f"unknown strategy {strategy!r}")

@@ -6,10 +6,17 @@ bucket-partitioned, snapshot-versioned, copy-on-write table whose commit
 protocol gives the same guarantees a MERGE INTO an Iceberg table would:
 
 - **Bucket partitioning** ``bucket = pmod(xxhash64(repo, path), n_buckets)``
-  (Iceberg's ``bucket(N, ...)`` transform).  A merge rewrites ONLY the
-  buckets its batch touches — at 100 TB with n_buckets=16384 a typical
+  (Iceberg's ``bucket(N, ...)`` transform).  A merge reads and rewrites ONLY
+  the buckets its batch touches — at 100 TB with n_buckets=16384 a typical
   micro-batch touches a bounded subset and the rewrite cost is proportional
   to touched data, not table size.
+- **One apply path** (``apply_ops``; ``merge`` is a thin entry into it):
+  MERGE *is* last-writer-wins.  The touched buckets' rows, as ops, are
+  unioned with the batch's ops, one ``max_by(seq)`` per key picks each
+  key's final row, and one exchange on ``bucket`` — one partition per
+  touched bucket — feeds both that aggregate and the bucket-partitioned
+  write.  Like Bifrost's one sink transaction per batch, a commit costs
+  what the batch touches.
 - **Snapshot versioning**: each commit writes new parquet under
   ``data/<snapshot>/bucket=NN/`` then atomically swings ``_state/CURRENT``
   (os.replace) to a JSON manifest mapping every bucket to the snapshot that
@@ -92,8 +99,11 @@ def _write_codec() -> str:
     BIFROST_WRITE_CODEC=zstd."""
     return os.environ.get("BIFROST_WRITE_CODEC", "lz4")
 
-def bucket_expr(n_buckets: int):
-    return F.pmod(F.xxhash64(*[F.col(c) for c in PK_COLUMNS]), F.lit(n_buckets)).cast("int")
+def bucket_expr(n_buckets: int, struct: str | None = None):
+    """The bucket of a row's PK; ``struct`` names a PK-carrying struct
+    column instead (an event's ``before``/``after`` image)."""
+    pre = f"{struct}." if struct else ""
+    return F.pmod(F.xxhash64(*[F.col(pre + c) for c in PK_COLUMNS]), F.lit(n_buckets)).cast("int")
 
 
 # Ordered replay commits contiguous event_id ranges, so the merged set
@@ -321,7 +331,9 @@ class TargetTable:
                     # inference job (one driver job per snapshot per read).
                     reader = reader.schema(T.StructType.fromJson(schemas[snap]))
                 df = reader.parquet(os.path.join(self.path, "data", snap))
-                df = df.filter(F.col("bucket").isin([int(x) for x in bs]))
+                # one SQL predicate, not one Column literal per bucket: the
+                # same partition prune at one Py4J call instead of O(buckets)
+                df = df.filter(f"bucket IN ({', '.join(str(int(x)) for x in bs)})")
                 parts.append(df)
             out = parts[0]
             for p in parts[1:]:
@@ -398,18 +410,6 @@ class TargetTable:
             int(d.split("=", 1)[1]) for d in self._fs.listdir(out_dir) if d.startswith("bucket=")
         )
 
-    def _bucket_bytes(self, buckets: list[int]) -> int:
-        """On-disk bytes of the given buckets' current data files — driver-side
-        metadata only (the bucket→snapshot map names each directory)."""
-        bmap: dict[str, str] = self.state["buckets"]
-        total = 0
-        for b in buckets:
-            snap = bmap.get(str(b))
-            if snap is None:
-                continue
-            total += self._fs.dir_size(os.path.join(self.path, "data", snap, f"bucket={b}"))
-        return total
-
     def _materialize_extras(self, src: DataFrame, sv: int) -> DataFrame:
         """Split an op batch's raw ``extra`` map into typed columns for every
         extra KNOWN at schema version ``sv`` plus a residual map of the rest.
@@ -430,7 +430,9 @@ class TargetTable:
     def merge(self, resolved: DataFrame, batch_id: str, batch_range: tuple[int, int],
               schema_version: int | None = None, range_exclusive: bool = False,
               gtid_set: str | None = None) -> dict:
-        """MERGE the LWW-resolved ops (one terminal op per PK) into the table.
+        """MERGE already LWW-resolved ops (one terminal op per PK) into the
+        table — a thin entry into ``apply_ops``'s plan, with exact per-bucket
+        lineage metrics.
 
         Equivalent SQL (SURVEY.md §2.3 M1):
           MERGE INTO target t USING resolved s ON t.repo=s.repo AND t.path=s.path
@@ -440,291 +442,83 @@ class TargetTable:
         """
         if self.is_applied(batch_id, batch_range, range_exclusive):
             return {"skipped": True, "batch_id": batch_id}
-
-        sv = self.state["schema_version"] if schema_version is None else schema_version
-        extras = [n for n, _t in self.registry.extra_columns(sv)]
-
-        src = resolved.withColumn("bucket", bucket_expr(self.n_buckets))
-        src = self._materialize_extras(src, sv)
-        src = src.select(
-            *PK_COLUMNS, "op", "commit", "lang", "content",
-            F.col("event_id").alias("src_event_id"), "bucket", *extras, "extra",
-        ).persist()
-
-        # per-bucket lineage metrics + affected-bucket list in ONE small job
-        # over the already-deduped source (≤1 row per key).
-        t_lww = time.time()
+        t0 = time.time()
+        src = resolved
+        if "seq" not in src.columns:
+            # resolved ops are still ops: rank them the way events_to_ops does
+            src = src.withColumn(
+                "seq", F.col("event_id") * 2 + (F.col("op") == "upsert").cast("long"))
+        src = src.persist()
+        # per-bucket lineage metrics + the touched-bucket list in ONE small
+        # job over the already-deduped source (≤1 row per key).
         mrows = (
-            src.groupBy("bucket")
+            src.groupBy(bucket_expr(self.n_buckets).alias("bucket"))
             .agg(
                 F.count("*").alias("rows_in"),
                 F.sum(F.when(F.col("op") == "upsert", 1).otherwise(0)).alias("upserts"),
                 F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-                F.min("src_event_id").alias("min_event_id"),
-                F.max("src_event_id").alias("max_event_id"),
-                # the broadcast-safety gate needs ALL payload bytes — a wide
-                # batch can live in DDL-added extras / the residual map with
-                # a tiny content column (to_json covers both in one expr)
-                F.sum(
-                    F.coalesce(F.length("content"), F.lit(0))
-                    + F.coalesce(F.length(F.to_json(F.struct(*extras, "extra"))), F.lit(0))
-                ).alias("content_bytes"),
+                F.min("event_id").alias("min_event_id"),
+                F.max("event_id").alias("max_event_id"),
             )
             .collect()
         )
-        affected = sorted(r["bucket"] for r in mrows)
-        t0 = time.time()
-        lww_ms = (t0 - t_lww) * 1000
-        if not affected:
+        lww_ms = (time.time() - t0) * 1000
+        try:
+            res = self._apply(
+                src, batch_id, batch_range, touched=[r["bucket"] for r in mrows],
+                schema_version=schema_version, gtid_set=gtid_set,
+                n_ops=int(sum(r["rows_in"] for r in mrows)),
+                metrics=[r.asDict() for r in mrows],
+            )
+        finally:
             src.unpersist()
-            return self._commit_noop(batch_id, batch_range)
-
-        tgt = self.read(buckets=affected, include_deleted=True)
-
-        # use_src: the source op wins iff it is strictly newer (tgt absent ⇒
-        # newer).  Deletes become tombstones, never row removal — this makes
-        # merge commutative across disjoint batches (see module docstring).
-        use_src = F.col("s.op").isNotNull() & (
-            F.col("s.src_event_id") > F.coalesce(F.col("t.last_event_id"), F.lit(-1))
-        )
-        src_is_del = use_src & (F.col("s.op") == "delete")
-
-        def pick(col: str):
-            return (
-                F.when(src_is_del, F.lit(None))
-                .when(use_src, F.col(f"s.{col}"))
-                .otherwise(F.col(f"t.{col}"))
-                .alias(col)
-            )
-
-        def merged_select(joined: DataFrame) -> DataFrame:
-            return joined.select(
-                *PK_COLUMNS,
-                pick("commit"),
-                pick("lang"),
-                pick("content"),
-                F.when(use_src, F.col("s.src_event_id")).otherwise(F.col("t.last_event_id")).alias("last_event_id"),
-                F.when(use_src, F.col("s.op") == "delete")
-                .otherwise(F.coalesce(F.col("t.is_deleted"), F.lit(False)))
-                .alias("is_deleted"),
-                *[pick(c) for c in extras],
-                pick("extra"),
-                F.coalesce(F.col("t.bucket"), F.col("s.bucket")).alias("bucket"),
-            )
-
-        n_ops = int(sum(r["rows_in"] for r in mrows))
-        # Path choice is cost-based AND byte-based: the broadcast
-        # decomposition only wins when the affected target data is much
-        # larger than the batch (the steady-state shape at 100 TB, where it
-        # avoids shuffling the rewritten buckets) — and it is only SAFE when
-        # the broadcast relation actually fits executor memory, which is a
-        # byte bound, not a row bound (300k wide rows can be GBs).  Batch
-        # bytes here are MEASURED (payload lengths from the metrics agg just
-        # run), not estimated per-row; affected-target bytes come free from
-        # the bucket file map.
-        tgt_bytes = self._bucket_bytes(affected)
-        content_bytes = int(sum(r["content_bytes"] or 0 for r in mrows))
-        src_bytes_est = content_bytes + n_ops * int(os.environ.get("BIFROST_OP_OVERHEAD_BYTES", "128"))
-        bcast_max_bytes = int(os.environ.get("BIFROST_BROADCAST_MAX_BYTES", str(128 * 1024 * 1024)))
-        bcast_ratio = float(os.environ.get("BIFROST_BCAST_TGT_RATIO", "4"))
-        snap = self._next_snapshot()
-        out_dir = os.path.join(self.path, "data", snap)
-
-        merge_path = "broadcast" if (
-            src_bytes_est <= bcast_max_bytes and tgt_bytes > bcast_ratio * src_bytes_est
-        ) else "shuffle"
-        if merge_path == "broadcast":
-            # Broadcast-decomposed MERGE (batch ≪ table, the steady-state
-            # shape at 100 TB): full outer join cannot broadcast, so split it
-            #   1. tgt LEFT OUTER broadcast(src): updates/deletes/keeps —
-            #      the target STREAMS through, zero shuffle, and each task
-            #      keeps its on-disk bucket alignment so the partitioned
-            #      write needs no repartition (≤1 file per input split).
-            #   2. inserts = src ANTI (matched keys), where matched keys come
-            #      from a column-pruned key-only scan of tgt (reads just the
-            #      PK columns from parquet) semi-joined against broadcast
-            #      src keys — again no shuffle.
-            joined = tgt.alias("t").join(F.broadcast(src).alias("s"), on=PK_COLUMNS, how="left_outer")
-            out_upd = merged_select(joined)
-            src_keys = src.select(*PK_COLUMNS)
-            matched = tgt.select(*PK_COLUMNS).join(F.broadcast(src_keys), on=PK_COLUMNS, how="left_semi")
-            inserts = src.join(F.broadcast(matched), on=PK_COLUMNS, how="left_anti")
-            out_ins = inserts.select(
-                *PK_COLUMNS,
-                *[F.when(F.col("op") == "delete", F.lit(None)).otherwise(F.col(c)).alias(c)
-                  for c in ("commit", "lang", "content")],
-                F.col("src_event_id").alias("last_event_id"),
-                (F.col("op") == "delete").alias("is_deleted"),
-                *[F.when(F.col("op") == "delete", F.lit(None)).otherwise(F.col(c)).alias(c) for c in extras],
-                F.when(F.col("op") == "delete", F.lit(None)).otherwise(F.col("extra")).alias("extra"),
-                F.col("bucket"),
-            )
-            out = out_upd.unionByName(out_ins)
-            out.write.partitionBy("bucket").option("compression", _write_codec()).mode("overwrite").parquet(out_dir)
-        else:
-            # Comparable-size (or very large batch) merge: shuffle-based full
-            # outer join — both sides exchange once on the PK, AQE handles
-            # skew — then ONE output file per bucket via a bucket-hash
-            # repartition, so the table's file count stays equal to its
-            # bucket count instead of tasks × buckets.
-            joined = tgt.alias("t").join(src.alias("s"), on=PK_COLUMNS, how="full_outer")
-            out = merged_select(joined)
-            (
-                # hash-repartition on bucket at 2x width: every bucket VALUE
-                # maps to exactly one partition (one output file per bucket),
-                # the 2x width thins hash collisions (two buckets sharing a
-                # write task), and unlike repartitionByRange there is no
-                # sampling pass — range partitioning re-executes the whole
-                # upstream merge once just to pick bounds (measured +11%).
-                out.repartition(2 * max(len(affected), 1), "bucket")
-                .write.partitionBy("bucket")
-                .option("compression", _write_codec())
-                .mode("overwrite")
-                .parquet(out_dir)
-            )
-        src.unpersist()
-        written = set(self._buckets_in(out_dir))
-        wall_ms = (time.time() - t0) * 1000
-
-        st = dict(self.state)
-        st["snapshot"] = snap
-        bmap = dict(st["buckets"])
-        for b in affected:
-            if b in written:
-                bmap[str(b)] = snap
-            else:
-                bmap.pop(str(b), None)  # bucket emptied by deletes
-        st["buckets"] = bmap
-        live_snaps = set(bmap.values())
-        st["schemas"] = {
-            s: j
-            for s, j in {**st.get("schemas", {}), snap: out.schema.jsonValue()}.items()
-            if s in live_snaps
-        }
-        st["last_event_id"] = max(st["last_event_id"], batch_range[1])
-        self._union_gtid(st, gtid_set)
-        self._record_applied(st, {
-            "batch_id": batch_id,
-            "min_event_id": batch_range[0],
-            "max_event_id": batch_range[1],
-            "kind": "merge",
-            "n_ops": n_ops,
-            "committed_at": time.time(),
-            "wall_ms": wall_ms,
-        })
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
-        # Per-bucket lineage goes to an append-only sidecar, NOT the state
-        # JSON: the state is rewritten on every commit, so embedding
-        # O(buckets) metrics per batch would make each commit O(batches ×
-        # buckets) — unbounded at stream scale.  Lineage is advisory and
-        # appended AFTER the atomic CURRENT swing (both merge paths do the
-        # same), so a lineage entry always refers to a committed batch; the
-        # crash window is committed-without-lineage, which a crash-replay
-        # repairs because the manifest skip path re-appends nothing and the
-        # entry is keyed by batch_id (last line wins).
-        self._append_lineage(
-            {
-                "batch_id": batch_id,
-                "wall_ms": wall_ms,
-                "merge_path": merge_path,
-                "metrics": [
-                    {
-                        "bucket": r["bucket"],
-                        "rows_in": r["rows_in"],
-                        "upserts": r["upserts"],
-                        "deletes": r["deletes"],
-                        "min_event_id": r["min_event_id"],
-                        "max_event_id": r["max_event_id"],
-                    }
-                    for r in mrows
-                ],
-            }
-        )
-        return {
-            "skipped": False,
-            "batch_id": batch_id,
-            "buckets_rewritten": len(affected),
-            "n_ops": n_ops,
-            "merge_path": merge_path,
-            "src_bytes_est": src_bytes_est,
-            "lww_ms": lww_ms,
-            "wall_ms": wall_ms,
-        }
+        res["lww_ms"] = lww_ms
+        return res
 
     def apply_ops(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
                   schema_version: int | None = None, n_ops_hint: int | None = None,
                   n_keys_hint: int | None = None,
                   lww_strategy: str = "agg", range_exclusive: bool = False,
-                  gtid_set: str | None = None) -> dict:
-        """Apply RAW (un-deduped) keyed ops — cost-based physical choice:
+                  gtid_set: str | None = None, touched: list[int] | None = None) -> dict:
+        """Apply RAW (un-deduped) keyed ops — the table's one apply path.
 
-        - batch ≪ table (the 100 TB steady state): resolve LWW first, then
-          the broadcast-decomposed ``merge`` that streams only the affected
-          buckets through with zero shuffle;
-        - batch ~ table (bootstrap-adjacent, bench shape): the FUSED path —
-          MERGE *is* LWW, so union the live table rows (as ops at
-          ``seq = 2*last_event_id + 1``, tombstones as deletes) with the raw
-          batch ops and take one ``max_by`` per key.  ONE payload shuffle
-          total — hash-partitioned on ``bucket`` so the same exchange serves
-          the LWW aggregate AND the partitionBy("bucket") write (see the
-          single-exchange note in ``_merge_fused``); replaces LWW-shuffle +
-          sort-merge-join + write-repartition (three shuffles) of the naive
-          plan.  Tie at equal seq can only be a redelivered identical op, so
-          either winner is byte-identical (guard semantics of ``merge`` are
-          preserved: a src op beats a table row only when strictly newer).
+        MERGE *is* LWW: the rows of the buckets the batch touches (read
+        pruned to those buckets; live rows as the upsert that produced them,
+        ``seq = 2*last_event_id + 1``, tombstones as their delete) are
+        unioned with the batch ops and ONE ``max_by(seq)`` per (bucket, PK)
+        picks each key's final row (``operators.lww.resolve_lww``).  ONE
+        payload exchange — hash-partitioned on ``bucket`` into one partition
+        per touched bucket — serves both that aggregate and the
+        partitionBy("bucket") write, and the commit repoints only the
+        touched buckets.  At equal seq the table row wins: the strict-newer
+        guard of the SQL MERGE (``s.event_id > t.last_event_id``).
+
+        ``touched`` is the set of buckets the ops fall in.  The replay
+        engine collects it in the pre-scan it already runs; without it, ONE
+        agg job here collects it together with whichever of the op count
+        and the distinct-key estimate was not hinted.  Those two arm the
+        map-side pre-LWW combine for dup-heavy (hot-key) batches: a batch
+        whose ops-per-key ratio reaches BIFROST_FUSED_PRELWW_RATIO
+        (default 8) collapses its duplicates before the exchange instead of
+        piling them onto one reducer; BIFROST_FUSED_PRELWW=1/0
+        force-overrides in either direction.
         """
         self._assert_writable("apply_ops")
         if self.is_applied(batch_id, batch_range, range_exclusive):
             return {"skipped": True, "batch_id": batch_id}
-        # The cost choice needs a batch size AND a distinct-key estimate.
-        # Callers on the hot path (the replay engine, the streaming job)
-        # pass both from the stats they already have; an external caller
-        # without hints gets ONE agg job here (count + approx distinct
-        # keys, same scan) rather than being silently routed to the fused
-        # FULL-TABLE rewrite with the hot-key pre-LWW guard disarmed.
-        if n_ops_hint is not None and n_keys_hint is None:
-            # A size hint alone would silently disarm the pre-LWW hot-key
-            # guard (bool(None) is False) — still estimate the key count.
-            from bifrost_spark.schemas import PK_COLUMNS
-
-            n_keys_hint = ops.agg(
-                F.approx_count_distinct(
-                    F.concat_ws("\x01", *[F.col(c) for c in PK_COLUMNS])
-                ).alias("k")
-            ).collect()[0]["k"]
-        if n_ops_hint is not None:
-            n_ops = n_ops_hint
-        else:
-            from bifrost_spark.schemas import PK_COLUMNS
-
-            r = ops.agg(
-                F.count("*").alias("n"),
-                F.approx_count_distinct(
-                    F.concat_ws("\x01", *[F.col(c) for c in PK_COLUMNS])
-                ).alias("k"),
-            ).collect()[0]
-            n_ops = r["n"]
-            if n_keys_hint is None:
-                n_keys_hint = r["k"]
-        tgt_bytes = self._bucket_bytes([int(b) for b in self.state["buckets"]])
-        src_bytes_est = n_ops * int(os.environ.get("BIFROST_AVG_OP_BYTES", "512"))
-        bcast_max_bytes = int(os.environ.get("BIFROST_BROADCAST_MAX_BYTES", str(128 * 1024 * 1024)))
-        bcast_ratio = float(os.environ.get("BIFROST_BCAST_TGT_RATIO", "4"))
-        if src_bytes_est <= bcast_max_bytes and tgt_bytes > bcast_ratio * src_bytes_est:
-            from bifrost_spark.operators.lww import resolve_lww
-
-            return self.merge(resolve_lww(ops, strategy=lww_strategy), batch_id=batch_id,
-                              batch_range=batch_range, schema_version=schema_version,
-                              range_exclusive=range_exclusive, gtid_set=gtid_set)
-        # Fused-path hot-key decision, cost-based like everything above: when
-        # the source tells us its distinct-key estimate (the chunk index
-        # records approx_count_distinct per segment at write time; the
-        # fallback stats scan computes it in the same agg), a batch whose
-        # ops-per-key ratio exceeds BIFROST_FUSED_PRELWW_RATIO (default 8)
-        # pre-resolves LWW so the duplicates collapse map-side BEFORE the
-        # single bucket exchange instead of piling onto one reducer.
-        # BIFROST_FUSED_PRELWW=1/0 force-overrides in either direction.
+        stats = {}
+        if touched is None:
+            stats["touched"] = F.collect_set(bucket_expr(self.n_buckets))
+        if n_ops_hint is None:
+            stats["n"] = F.count("*")
+        if n_keys_hint is None:
+            # a size hint alone must not silently disarm the pre-LWW guard
+            stats["k"] = F.approx_count_distinct(F.concat_ws("\x01", *PK_COLUMNS))
+        if stats:
+            r = ops.agg(*[c.alias(k) for k, c in stats.items()]).collect()[0]
+            touched = r["touched"] if touched is None else touched
+            n_ops_hint = r["n"] if n_ops_hint is None else n_ops_hint
+            n_keys_hint = r["k"] if n_keys_hint is None else n_keys_hint
         force = os.environ.get("BIFROST_FUSED_PRELWW", "").lower()
         if force in ("1", "true", "yes"):
             pre_lww = True
@@ -732,83 +526,76 @@ class TargetTable:
             pre_lww = False
         else:
             ratio = float(os.environ.get("BIFROST_FUSED_PRELWW_RATIO", "8"))
-            pre_lww = bool(n_keys_hint) and n_ops >= ratio * n_keys_hint
-        return self._merge_fused(ops, batch_id, batch_range, schema_version,
-                                 gtid_set=gtid_set, pre_lww=pre_lww,
-                                 lww_strategy=lww_strategy)
+            pre_lww = bool(n_keys_hint) and n_ops_hint >= ratio * n_keys_hint
+        return self._apply(ops, batch_id, batch_range, touched=touched,
+                           schema_version=schema_version, gtid_set=gtid_set,
+                           pre_lww=pre_lww, lww_strategy=lww_strategy)
 
-    def _merge_fused(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
-                     schema_version: int | None = None, gtid_set: str | None = None,
-                     pre_lww: bool = False, lww_strategy: str = "agg") -> dict:
+    def _apply(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
+               touched: list[int], schema_version: int | None = None,
+               gtid_set: str | None = None, pre_lww: bool = False,
+               lww_strategy: str = "agg", n_ops: int | None = None,
+               metrics: list[dict] | None = None) -> dict:
+        from bifrost_spark.operators import lww
+
+        touched = sorted({int(b) for b in touched})
+        if not touched:
+            return self._commit_noop(batch_id, batch_range)
         sv = self.state["schema_version"] if schema_version is None else schema_version
         extras = [n for n, _t in self.registry.extra_columns(sv)]
+        payload = ["op", "commit", "lang", "content", *extras, "extra", "event_id"]
         t0 = time.time()
 
         if pre_lww:
-            # Hot-key mitigation (chosen cost-based in apply_ops): the
-            # single-exchange plan below shuffles RAW batch ops to their
-            # bucket reducer, so a dup-heavy batch would pile one key's ops
-            # onto one task.  Pre-resolving LWW costs one extra PK exchange
-            # of the BATCH ONLY (map-side partial max_by collapses the hot
-            # key to ≤1 row per map task before it moves) — the table side
-            # still rides the single bucket exchange.  The caller's
-            # lww_strategy is honored — salted_window exists precisely for
-            # the hot-key batches that land here.
-            from bifrost_spark.operators.lww import resolve_lww
+            # Hot-key mitigation: the single exchange below moves RAW batch
+            # ops to their bucket's reducer, so a dup-heavy batch would pile
+            # one key's ops onto one task.  Pre-resolving costs one extra PK
+            # exchange of the BATCH ONLY (the map-side partial max_by
+            # collapses a hot key to ≤1 row per map task before it moves).
+            ops = lww.resolve_lww(ops, strategy=lww_strategy)
 
-            ops = resolve_lww(ops, strategy=lww_strategy)
-
-        src = self._materialize_extras(ops, sv)
-        src = src.select(
-            *PK_COLUMNS, "op", "commit", "lang", "content", *extras, "extra",
-            F.col("event_id"), F.col("seq").cast("long").alias("seq"),
+        # Rank = 2*seq + is_table_row: at equal seq the table row wins (the
+        # strict-newer MERGE guard), and max_by never sees a tie.
+        src = self._materialize_extras(ops, sv).select(
+            *PK_COLUMNS, *payload,
+            (F.col("seq").cast("long") * 2).alias("seq"),
             bucket_expr(self.n_buckets).alias("bucket"),
         )
-
-        tgt = self.read(buckets=None, include_deleted=True)
+        tgt = self.read(buckets=touched, include_deleted=True)
         tgt_ops = tgt.select(
             *PK_COLUMNS,
             F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
             "commit", "lang", "content", *extras, "extra",
             F.col("last_event_id").alias("event_id"),
-            # a live row ranks as the upsert that produced it; a tombstone as
-            # its delete — same encoding events_to_ops uses (2e / 2e+1).
-            (F.col("last_event_id") * 2 + F.when(F.col("is_deleted"), F.lit(0)).otherwise(F.lit(1)))
-            .cast("long").alias("seq"),
+            # a live row ranks as the upsert that produced it, a tombstone
+            # as its delete — the events_to_ops encoding (2e+1 / 2e)
+            ((F.col("last_event_id") * 2 + F.when(F.col("is_deleted"), F.lit(0)).otherwise(F.lit(1)))
+             * 2 + 1).cast("long").alias("seq"),
             F.col("bucket"),
         )
 
         # ONE payload exchange for LWW *and* the partitioned write: bucket is
         # a pure function of the PK, so hash-partitioning on bucket alone
-        # already co-locates every row of a PK — and Catalyst accepts it,
-        # because HashPartitioning(bucket) satisfies the aggregate's
-        # ClusteredDistribution(bucket, repo, path) (partitioning exprs are a
-        # subset of the grouping exprs).  Grouping by (bucket, pk) is the
-        # same grouping as (pk) — bucket is functionally dependent — so the
-        # explicit repartition below is the ONLY exchange in the whole plan,
-        # and its bucket alignment flows through the aggregate straight into
-        # the partitionBy("bucket") write (one file per bucket, no second
-        # shuffle of the merged table).  Trade-off, documented: the partial
-        # max_by combine now runs above this exchange, so a batch whose hot
-        # KEY carries millions of redundant ops is not pre-collapsed map-side
-        # — that shape belongs to the broadcast path, whose LWW aggregate
-        # still combines before its own exchange (resolve_lww).
-        val = F.struct("op", "commit", "lang", "content", *extras, "extra", "event_id")
-        win = (
-            src.unionByName(tgt_ops)
-            .repartition(_write_width(self.n_buckets), "bucket")
-            .groupBy("bucket", *PK_COLUMNS)
-            .agg(F.max_by(val, F.col("seq")).alias("v"))
+        # co-locates every row of a PK — and Catalyst accepts it, because
+        # HashPartitioning(bucket) satisfies the aggregate's
+        # ClusteredDistribution(bucket, repo, path).  Its bucket alignment
+        # flows through the aggregate straight into the partitionBy("bucket")
+        # write: one file per bucket, no second shuffle.  One partition per
+        # touched bucket: a hash partition holds whole buckets, so the width
+        # sets only the task count, and the rest of the table is never read.
+        win = lww.resolve_lww(
+            src.unionByName(tgt_ops).repartition(len(touched), "bucket"),
+            keys=["bucket", *PK_COLUMNS], payload=payload,
         )
-        is_del = F.col("v.op") == "delete"
+        is_del = F.col("op") == "delete"
         out = win.select(
             *PK_COLUMNS,
-            *[F.when(is_del, F.lit(None)).otherwise(F.col(f"v.{c}")).alias(c)
+            *[F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
               for c in ("commit", "lang", "content")],
-            F.col("v.event_id").alias("last_event_id"),
+            F.col("event_id").alias("last_event_id"),
             is_del.alias("is_deleted"),
-            *[F.when(is_del, F.lit(None)).otherwise(F.col(f"v.{c}")).alias(c) for c in extras],
-            F.when(is_del, F.lit(None)).otherwise(F.col("v.extra")).alias("extra"),
+            *[F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c) for c in extras],
+            F.when(is_del, F.lit(None)).otherwise(F.col("extra")).alias("extra"),
             F.col("bucket"),
         )
 
@@ -823,46 +610,60 @@ class TargetTable:
         )
         snap = self._next_snapshot()
         out_dir = os.path.join(self.path, "data", snap)
-        (
-            # already hash-partitioned on bucket by the single exchange above
-            # (2x width: 1 file/bucket, hash collisions thinned) — writing
-            # here adds NO further shuffle.
-            out.write.partitionBy("bucket")
-            .option("compression", _write_codec())
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        m = obs.get
+        out.write.partitionBy("bucket").option("compression", _write_codec()).mode("overwrite").parquet(out_dir)
         written = self._buckets_in(out_dir)
+        if not set(written) <= set(touched):
+            # a bucket outside ``touched`` was written from its ops alone —
+            # committing it would drop the rows the pruned read skipped
+            raise RuntimeError(
+                f"{batch_id}: ops fall in buckets {sorted(set(written) - set(touched))} "
+                "outside the touched set; nothing committed")
         wall_ms = (time.time() - t0) * 1000
 
         st = dict(self.state)
         st["snapshot"] = snap
-        st["buckets"] = {str(b): snap for b in written}
-        st["schemas"] = {snap: out.schema.jsonValue()}
+        # a touched bucket that had rows was read, so it was rewritten
+        bmap = {**st["buckets"], **{str(b): snap for b in written}}
+        st["buckets"] = bmap
+        live_snaps = set(bmap.values())
+        st["schemas"] = {
+            s: j
+            for s, j in {**st.get("schemas", {}), snap: out.schema.jsonValue()}.items()
+            if s in live_snaps
+        }
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         self._union_gtid(st, gtid_set)
         self._record_applied(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
-                                  "max_event_id": batch_range[1], "kind": "merge_fused",
-                                  "n_ops": None, "committed_at": time.time(), "wall_ms": wall_ms})
+                                  "max_event_id": batch_range[1], "kind": "merge",
+                                  "n_ops": n_ops, "committed_at": time.time(), "wall_ms": wall_ms})
         self._write_snapshot(self._fs, self.path, st)
         self._load_state()
+        # Per-bucket lineage goes to an append-only sidecar, NOT the state
+        # JSON: the state is rewritten on every commit, so embedding
+        # O(buckets) metrics per batch would make each commit O(batches ×
+        # buckets) — unbounded at stream scale.  Lineage is advisory and
+        # appended AFTER the atomic CURRENT swing, so an entry always refers
+        # to a committed batch; the crash window is committed-without-lineage
+        # (the entry is keyed by batch_id, last line wins).
+        level = "bucket" if metrics is not None else "coarse"
+        if metrics is None:
+            m = obs.get
+            metrics = [{"rows_out": m["rows_out"], "tombstones": m["tombstones"],
+                        "max_event_id": m["max_event_id"], "buckets": len(written)}]
         self._append_lineage(
-            {"batch_id": batch_id, "wall_ms": wall_ms, "level": "coarse",
-             "metrics": [{"rows_out": m["rows_out"], "tombstones": m["tombstones"],
-                          "max_event_id": m["max_event_id"], "buckets": len(written)}],
+            {"batch_id": batch_id, "wall_ms": wall_ms, "level": level, "metrics": metrics,
              "bucket_rows": self._bucket_rows_from_footers(out_dir, written)}
         )
         return {"skipped": False, "batch_id": batch_id, "fused": True, "pre_lww": pre_lww,
-                "buckets_rewritten": len(written), "n_ops": None, "wall_ms": wall_ms}
+                "buckets_rewritten": len(written), "n_ops": n_ops, "wall_ms": wall_ms}
 
     def _bucket_rows_from_footers(self, out_dir: str, buckets: list[int],
                                   max_buckets: int = 4096) -> dict[str, int] | None:
-        """Per-bucket row counts read from parquet FOOTER metadata — pure
-        driver-side pyarrow, no Spark job.  Capped: the fused path that
-        needs this rewrites every bucket, which only happens at sandbox /
-        bootstrap scale; a 16k-bucket steady-state table takes the
-        broadcast path whose lineage is exact already."""
+        """Per-bucket row counts of the buckets one commit rewrote, read
+        from parquet FOOTER metadata — pure driver-side pyarrow, no Spark
+        job.  Capped, because a commit's cost here grows with the buckets it
+        touched: a batch that rewrites thousands of buckets keeps only the
+        coarse observe() lineage."""
         from bifrost_spark.metafs import LocalMetaFS
 
         if len(buckets) > max_buckets or not isinstance(self._fs, LocalMetaFS):
@@ -979,6 +780,7 @@ class TargetTable:
         (
             keep.repartition(_write_width(self.n_buckets), "bucket")
             .write.partitionBy("bucket")
+            .option("compression", _write_codec())
             .mode("overwrite")
             .parquet(out_dir)
         )

@@ -24,8 +24,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bifrost_spark.operators.lww import events_to_ops
-from bifrost_spark.operators.merge import TargetTable
+from bifrost_spark.operators.merge import TargetTable, bucket_expr
 from bifrost_spark.schemas import EVENT_SCHEMA
+
+
+def _touched_aggs(n_buckets: int, live=None) -> list:
+    """Aggregates naming the buckets a batch of EVENTS touches, for the
+    aggregation that already scans it: the after-image's bucket of every
+    non-delete event and the before-image's bucket of every event that
+    carries one (a delete, or an update — a PK-changing update touches
+    both).  A superset of the buckets of ``events_to_ops``'s ops;
+    ``_touched`` unions the two sets of the collected row."""
+    live = F.lit(True) if live is None else live
+    has_before = (F.col("event_type") == "delete") | F.col("before").isNotNull()
+    return [
+        F.collect_set(F.when(live & (F.col("event_type") != "delete"),
+                             bucket_expr(n_buckets, "after"))).alias("touched_after"),
+        F.collect_set(F.when(live & has_before,
+                             bucket_expr(n_buckets, "before"))).alias("touched_before"),
+    ]
+
+
+def _touched(row) -> list[int]:
+    return sorted(set(row["touched_after"]) | set(row["touched_before"]))
 
 
 def _gtid_range(first: str | None, last: str | None) -> str | None:
@@ -163,6 +184,7 @@ class ReplayEngine:
                 F.sort_array(
                     F.collect_list(F.when(F.col("event_type") == "ddl", F.struct("event_id", "query")))
                 ).alias("ddls"),
+                *_touched_aggs(self.table.n_buckets, live),
             ).collect()[0]
             ddls = list(stats["ddls"])
             stats_ms = (time.time() - t0) * 1000
@@ -170,7 +192,7 @@ class ReplayEngine:
             if not ddls:
                 return self._merge_segment(
                     events.filter(live), n=stats["n"], lo=stats["lo"], hi=stats["hi"],
-                    stats_ms=stats_ms, keys_est=stats["keys_est"],
+                    stats_ms=stats_ms, keys_est=stats["keys_est"], touched=_touched(stats),
                 )
 
             # DDL barrier path: segment the batch so a merge never mixes two
@@ -264,7 +286,7 @@ class ReplayEngine:
     def _merge_segment(self, seg: DataFrame, n: int | None = None,
                        lo: int | None = None, hi: int | None = None,
                        stats_ms: float = 0.0, gtid_set: str | None = None,
-                       keys_est: int | None = None) -> list[dict]:
+                       keys_est: int | None = None, touched: list[int] | None = None) -> list[dict]:
         # F9 stale-event skip (reference: channel_consume.go:300-314): a
         # redelivered batch — even one sliced differently than the original
         # (checkpoint wipe, changed trigger size) — contributes nothing below
@@ -278,20 +300,25 @@ class ReplayEngine:
 
             r = seg.agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi"),
                         F.count("*").alias("n"),
-                        F.approx_count_distinct(lww_key_expr()).alias("keys_est")).collect()[0]
-            n, lo, hi, keys_est = r["n"], r["lo"], r["hi"], r["keys_est"]
+                        F.approx_count_distinct(lww_key_expr()).alias("keys_est"),
+                        *_touched_aggs(self.table.n_buckets)).collect()[0]
+            n, lo, hi, keys_est, touched = r["n"], r["lo"], r["hi"], r["keys_est"], _touched(r)
         if n == 0:
             return []
         batch_id = f"merge:{lo}-{hi}"
         if self.table.is_applied(batch_id, (lo, hi), range_exclusive=self.ordered):
             return [{"skipped": True, "batch_id": batch_id}]
+        if touched is None:
+            # indexed batches skip the pre-scan: one key-only job reads just
+            # the image PKs (nested-column pruning) to name the buckets
+            touched = _touched(seg.agg(*_touched_aggs(self.table.n_buckets)).collect()[0])
         last_err: Exception | None = None
         for attempt in range(self.max_retries + 1):
             try:
                 res = self.table.apply_ops(
                     events_to_ops(seg), batch_id=batch_id, batch_range=(lo, hi),
                     n_ops_hint=n, n_keys_hint=keys_est, lww_strategy=self.lww_strategy,
-                    range_exclusive=self.ordered, gtid_set=gtid_set,
+                    range_exclusive=self.ordered, gtid_set=gtid_set, touched=touched,
                 )
                 res["stats_ms"] = round(stats_ms, 1)
                 if attempt:

@@ -146,13 +146,15 @@ class SchemaRegistry:
         preserving that invariant for values whose DDL has not arrived yet.
         """
         sv = self.current if v is None else self.version(v)
-        has_map = "extra" in df.columns
+        columns = df.columns  # one Py4J round trip, not one per column test
+        have = set(columns)
+        has_map = "extra" in have
         names = [n for n, _t in sv.extras]
-        base = base_cols or [c for c in df.columns if c not in dict(sv.extras) and not c.startswith("_")]
-        cols: list[Column] = [F.col(c) for c in base if c in df.columns and c != "extra"]
+        base = base_cols or [c for c in columns if c not in dict(sv.extras) and not c.startswith("_")]
+        cols: list[Column] = [F.col(c) for c in base if c in have and c != "extra"]
         for name, ltype in sv.extras:
             t = LOGICAL_TYPES.get(ltype, LOGICAL_TYPES["string"])
-            typed = F.col(name).cast(t) if name in df.columns else F.lit(None).cast(t)
+            typed = F.col(name).cast(t) if name in have else F.lit(None).cast(t)
             if has_map:
                 typed = F.coalesce(typed, F.col("extra")[name].cast(t))
             cols.append(typed.alias(name))

@@ -692,7 +692,6 @@ def test_pq_topk_matches_numpy_reference(spark, emb):
     rows = emb.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     V = np.array([[float(x) for x in r["embedding"]] for r in rows], dtype=np.float64)
-    order = np.lexsort((ids, (ids % M) * 2654435761 % M + 12345 % M))
     # exact key incl. the outer pmod (ids are small here so no wrap, but
     # compute it anyway to mirror the engine)
     key = ((ids % M) * 2654435761 + 12345) % M

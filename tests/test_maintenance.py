@@ -47,6 +47,26 @@ def test_compact_preserves_state_and_merges_files(spark, tmp_path):
         assert len(fs) == 1
 
 
+def test_compact_writes_the_merge_codec(spark, tmp_path):
+    """Compacted files carry the same parquet codec as merged ones (the
+    session default differs from the table's write codec)."""
+    import pyarrow.parquet as pq
+
+    def codecs(snap):
+        return {pq.ParquetFile(f).metadata.row_group(0).column(0).compression
+                for f in glob.glob(os.path.join(table.path, "data", snap, "bucket=*", "*.parquet"))}
+
+    table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=2)
+    table.merge(_resolved(spark, [("r", f"p{i}", "upsert", "c", "py", f"v{i}", None, 2 + 2 * i)
+                                  for i in range(6)]),
+                batch_id="b1", batch_range=(2, 12))
+    merged = codecs(table.state["snapshot"])
+    table.compact()
+    compacted = codecs(table.state["snapshot"])
+    assert merged and len(merged) == 1
+    assert compacted == merged
+
+
 def test_compact_gcs_tombstones_below_lwm_only(spark, tmp_path):
     table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     table.merge(_resolved(spark, [("r", "a", "upsert", "c", "py", "v", None, 2),
@@ -134,9 +154,8 @@ def test_cli_status_json(spark, tmp_path, capsys):
     assert out["rows"] == 5 and out["live_buckets"] >= 1
 
 
-def test_fused_lineage_bucket_rows(spark, tmp_path, monkeypatch):
-    """Fused merges record per-bucket row counts from parquet footers."""
-    monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", "0")  # force fused
+def test_fused_lineage_bucket_rows(spark, tmp_path):
+    """Every apply records per-bucket row counts from parquet footers."""
     table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     ops = spark.createDataFrame(
         [("r", f"p{i}", "upsert", "c", "py", f"v{i}", None, 2 * (i + 1),

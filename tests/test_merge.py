@@ -1,11 +1,16 @@
 """TargetTable MERGE semantics: upsert/delete branches, guard, idempotency,
 bucket pruning, bootstrap."""
 
+import datetime
+
 import pyspark.sql.functions as F
 import pytest
 
-from bifrost_spark.operators.merge import TargetTable
+from bifrost_spark.operators.merge import TargetTable, bucket_expr
+from bifrost_spark.oracle import content_sha_map, sequential_apply
+from bifrost_spark.pipelines.replay import ReplayEngine
 from bifrost_spark.registry import SchemaRegistry
+from bifrost_spark.schemas import EVENT_SCHEMA
 
 
 def _resolved(spark, rows):
@@ -214,10 +219,10 @@ def _ops(spark, rows):
     )
 
 
-def test_fused_out_of_order_batches_commute(spark, tmp_path, monkeypatch):
-    """The FUSED single-shuffle merge path must commute across disjoint
-    batches exactly like the broadcast path (LWW union max is associative)."""
-    monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", "0")  # force fused
+def test_fused_out_of_order_batches_commute(spark, tmp_path):
+    """apply_ops on raw (un-deduped) ops must commute across disjoint
+    batches exactly like merge of resolved ops (LWW union max is
+    associative)."""
     early = [("r", "a", "upsert", "c1", "py", "v1", None, 10),
              ("r", "a", "upsert", "c1b", "py", "v1b", None, 11),  # intra-batch dedup
              ("r", "b", "upsert", "c2", "go", "b1", None, 12)]
@@ -247,7 +252,6 @@ def test_fused_prelww_knob_equal_state(spark, tmp_path, monkeypatch):
     cost-based: a dup-heavy batch (ops >> distinct-keys estimate) enables it
     automatically, an even batch does not, and the env knob force-overrides
     in both directions."""
-    monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", "0")  # force fused
     rows = [("r", "a", "upsert", f"c{i}", "py", f"v{i}", None, 10 + i) for i in range(20)]  # hot key
     rows += [("r", "b", "delete", None, None, None, None, 40),
              ("r", "c", "upsert", "c5", "go", "x1", None, 41)]
@@ -309,21 +313,99 @@ def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
     assert not table.is_applied("other", (2, 5), range_exclusive=False)
 
 
-def test_broadcast_gating_is_byte_based(spark, table, monkeypatch):
-    """A batch of few-but-wide rows must take the shuffle path when its
-    measured payload bytes exceed the broadcast cap, even though its row
-    count is tiny (the row-count gate of round 1 would have broadcast it)."""
-    table.merge(
-        _resolved(spark, [("r", f"seed{i}", "upsert", "c", "py", "x" * 10, None, 2 + 2 * i)
-                          for i in range(50)]),
-        batch_id="seed", batch_range=(2, 100),
+def _events(spark, rows):
+    # rows: (event_id, kind, before, after) with before/after None or
+    # (repo, path, content) -> EVENT_SCHEMA rows
+    def image(t):
+        if t is None:
+            return None
+        return {"repo": t[0], "path": t[1], "commit": "c", "lang": "py",
+                "content": t[2], "extra": None}
+
+    ts = datetime.datetime(2026, 1, 1)
+    return spark.createDataFrame(
+        [(eid, 1, eid, kind, "code", "repos", ts, None, None, image(b), image(a), None, 0)
+         for eid, kind, b, a in rows],
+        EVENT_SCHEMA,
     )
-    monkeypatch.setenv("BIFROST_BCAST_TGT_RATIO", "0")  # always prefer broadcast...
-    monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", "5000")  # ...unless bytes exceed cap
-    wide = _resolved(spark, [("r", f"w{i}", "upsert", "c", "py", "y" * 4000, None, 200 + 2 * i)
-                             for i in range(3)])
-    out = table.merge(wide, batch_id="wide", batch_range=(200, 204))
-    assert out["merge_path"] == "shuffle" and out["src_bytes_est"] > 5000
-    narrow = _resolved(spark, [("r", "n1", "upsert", "c", "py", "z", None, 300)])
-    out2 = table.merge(narrow, batch_id="narrow", batch_range=(300, 300))
-    assert out2["merge_path"] == "broadcast"
+
+
+def _buckets_of(spark, keys, n_buckets):
+    df = spark.createDataFrame(keys, "repo string, path string")
+    return {(r["repo"], r["path"]): r["b"]
+            for r in df.select("repo", "path", bucket_expr(n_buckets).alias("b")).collect()}
+
+
+def test_pk_change_across_buckets_rewrites_both_buckets_only(spark, tmp_path):
+    """A hint-less batch whose one event is a PK-changing update moves a
+    key from bucket x to bucket y: the pruned plan reads and rewrites
+    exactly x and y (the before-image bucket comes from the pre-scan),
+    every other bucket keeps its snapshot directory, the manifest keeps
+    schemas only for live snapshots, and the state equals the oracle."""
+    keys = [("r", f"k{i}") for i in range(40)]
+    bucket = _buckets_of(spark, keys + [("r", f"moved{i}") for i in range(40)], 8)
+    src = keys[0]
+    dst = next(k for k, b in bucket.items() if k[1].startswith("moved") and b != bucket[src])
+    snap = spark.createDataFrame(
+        [(r, p, "c0", "py", f"base-{p}", 0) for r, p in keys],
+        "repo string, path string, commit string, lang string, content string, last_event_id long",
+    )
+    table = TargetTable.create(spark, str(tmp_path / "pk"), n_buckets=8)
+    table.bootstrap(snap)
+    before = dict(table.state["buckets"])
+    events = _events(spark, [(2, "update", (*src, f"base-{src[1]}"), (*dst, "moved"))])
+
+    res = ReplayEngine(table).apply_batch(events)
+
+    assert res[0]["buckets_rewritten"] == 2
+    after = table.state["buckets"]
+    moved = {int(b) for b, s in after.items() if before.get(b) != s}
+    assert moved == {bucket[src], bucket[dst]}
+    assert all(after[b] == s for b, s in before.items() if int(b) not in moved)
+    assert set(table.state["schemas"]) == set(after.values())
+    expected = sequential_apply(events.toPandas(), snap.toPandas())
+    actual = table.to_pandas_sorted().reset_index(drop=True)
+    assert content_sha_map(actual) == content_sha_map(expected)
+    assert expected.equals(actual[expected.columns.tolist()])
+
+
+def test_redelivered_event_under_new_batch_id_keeps_table_row(spark, table):
+    """At equal seq the table row wins (the strict-newer MERGE guard): an
+    event redelivered under a fresh batch id — here with a different
+    payload, as a re-sliced source could hand it over — changes nothing."""
+    table.apply_ops(_ops(spark, [("r", "a", "upsert", "c1", "py", "first", None, 10)]),
+                    batch_id="b1", batch_range=(10, 10))
+    res = table.apply_ops(_ops(spark, [("r", "a", "upsert", "c1", "py", "again", None, 10)]),
+                          batch_id="b1-redelivered", batch_range=(10, 10))
+    assert res["skipped"] is False
+    row = _state(table)[("r", "a")]
+    assert row["content"] == "first" and row["last_event_id"] == 10
+
+
+def test_small_hintless_batch_job_budget(spark, tmp_path):
+    """A 16-event hint-less batch into a 32-bucket table runs at most 5
+    Spark jobs end to end (pre-scan, pruned read, one-exchange write)."""
+    table = TargetTable.create(spark, str(tmp_path / "jobs"), n_buckets=32)
+    table.bootstrap(spark.createDataFrame(
+        [("r", f"k{i}", "c0", "py", "base", 0) for i in range(500)],
+        "repo string, path string, commit string, lang string, content string, last_event_id long",
+    ))
+    engine = ReplayEngine(table)
+    engine.apply_batch(_events(spark, [(2, "insert", None, ("r", "warm", "w"))]))
+    rows = []
+    for i in range(16):
+        eid = 4 + 2 * i
+        if i % 4 == 3:
+            rows.append((eid, "delete", ("r", f"k{i}", None), None))
+        else:
+            rows.append((eid, "update", ("r", f"k{i}", "base"), ("r", f"k{i}", f"v{i}")))
+    batch = _events(spark, rows)
+    sc = spark.sparkContext
+    sc.setJobGroup("job-budget", "16-event hint-less batch")
+    try:
+        res = engine.apply_batch(batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("job-budget")
+    assert res[0]["buckets_rewritten"] < 32
+    assert len(jobs) <= 5, sorted(jobs)

@@ -1,8 +1,8 @@
 """Adversarial-shape property test (hypothesis): random event streams —
 unicode and empty-string PKs, NULL content, PK-changing updates, deletes of
-absent keys, arbitrary batch splits — through the FULL TargetTable apply on
-BOTH physical merge paths must equal the sequential-apply oracle frame for
-frame and on the north-rule sha map.
+absent keys, arbitrary batch splits — through the FULL TargetTable apply
+must equal the sequential-apply oracle frame for frame and on the
+north-rule sha map.
 
 Complements test_property_lww (op-level algebra) and test_replay_e2e (the
 generator's realistic distribution) with shapes the generator never emits:
@@ -78,11 +78,11 @@ def _batches(events, splits):
             if bounds[i] < bounds[i + 1]]
 
 
-def test_empty_final_state_both_paths(spark, tmp_path_factory, monkeypatch):
+def test_empty_final_state_both_paths(spark, tmp_path_factory):
     """Pinned regression (round-2 falsifying example): a stream that deletes
     every inserted key leaves an EMPTY final state; the frame-level compare
-    must still hold on both physical merge paths (dtype-stable empty oracle
-    frame, bifrost_spark/oracle.py)."""
+    must still hold (dtype-stable empty oracle frame, bifrost_spark/oracle.py).
+    The name predates the single apply path, when this ran once per path."""
     payload = {"repo": "r", "path": "p", "commit": "c1", "lang": "py",
                "content": "body", "extra": None}
     tomb = {**payload, "commit": None, "lang": None, "content": None}
@@ -94,44 +94,34 @@ def test_empty_final_state_both_paths(spark, tmp_path_factory, monkeypatch):
     expected = sequential_apply(df.toPandas())
     assert expected.empty and str(expected["last_event_id"].dtype) == "int64"
 
-    for path_name, env in (("fused", "0"), ("bcast", str(1 << 40))):
-        monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", env)
-        if env != "0":
-            monkeypatch.setenv("BIFROST_BCAST_TGT_RATIO", "0")
-        base = tmp_path_factory.mktemp(f"empty_{path_name}")
-        table = TargetTable.create(spark, str(base / "tbl"), n_buckets=4)
-        ReplayEngine(table, ordered=True).apply_batch(df)
-        actual = table.to_pandas_sorted().reset_index(drop=True)
-        assert content_sha_map(actual) == content_sha_map(expected), path_name
-        assert expected.equals(actual[expected.columns.tolist()]), path_name
-        monkeypatch.delenv("BIFROST_BCAST_TGT_RATIO", raising=False)
+    base = tmp_path_factory.mktemp("empty")
+    table = TargetTable.create(spark, str(base / "tbl"), n_buckets=4)
+    ReplayEngine(table, ordered=True).apply_batch(df)
+    actual = table.to_pandas_sorted().reset_index(drop=True)
+    assert content_sha_map(actual) == content_sha_map(expected)
+    assert expected.equals(actual[expected.columns.tolist()])
 
 
 @settings(max_examples=10, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(event_streams())
-def test_random_event_streams_match_oracle(spark, tmp_path_factory, monkeypatch, data):
+def test_random_event_streams_match_oracle(spark, tmp_path_factory, data):
     events, splits = data
     df = spark.createDataFrame(events, EVENT_SCHEMA)
     expected = sequential_apply(df.toPandas())
     exp_sha = content_sha_map(expected)
 
-    for path_name, env in (("fused", "0"), ("bcast", str(1 << 40))):
-        monkeypatch.setenv("BIFROST_BROADCAST_MAX_BYTES", env)
-        if env != "0":
-            monkeypatch.setenv("BIFROST_BCAST_TGT_RATIO", "0")
-        base = tmp_path_factory.mktemp(f"prop_{path_name}")
-        table = TargetTable.create(spark, str(base / "tbl"), n_buckets=4)
-        engine = ReplayEngine(table, ordered=True)
-        for batch in _batches(events, splits):
-            engine.apply_batch(spark.createDataFrame(batch, EVENT_SCHEMA))
-        actual = table.to_pandas_sorted().reset_index(drop=True)
-        assert content_sha_map(actual) == exp_sha, path_name
-        assert expected.equals(actual[expected.columns.tolist()]), path_name
-        # redelivery of the final batch is a pure no-op under ordered mode
-        res = engine.apply_batch(spark.createDataFrame(events[-3:], EVENT_SCHEMA))
-        assert all(r.get("skipped") or r.get("n_ops") == 0 for r in res), res
-        monkeypatch.delenv("BIFROST_BCAST_TGT_RATIO", raising=False)
+    base = tmp_path_factory.mktemp("prop")
+    table = TargetTable.create(spark, str(base / "tbl"), n_buckets=4)
+    engine = ReplayEngine(table, ordered=True)
+    for batch in _batches(events, splits):
+        engine.apply_batch(spark.createDataFrame(batch, EVENT_SCHEMA))
+    actual = table.to_pandas_sorted().reset_index(drop=True)
+    assert content_sha_map(actual) == exp_sha
+    assert expected.equals(actual[expected.columns.tolist()])
+    # redelivery of the final batch is a pure no-op under ordered mode
+    res = engine.apply_batch(spark.createDataFrame(events[-3:], EVENT_SCHEMA))
+    assert all(r.get("skipped") or r.get("n_ops") == 0 for r in res), res
 
 
 if __name__ == "__main__":

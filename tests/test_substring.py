@@ -131,3 +131,15 @@ def test_non_ascii_positions_align(spark):
         got = _run(spark, texts, hash_fn)
         for i, exp in enumerate(expected):
             assert got[i] == exp, (hash_fn, i, got[i], exp)
+
+
+def test_id_col_named_id(spark):
+    """A corpus whose id column is literally ``id`` scrubs exactly like one
+    keyed by ``doc_id`` (the internal starts key no longer shadows it)."""
+    texts = ["a b c d e f g x1", "y1 a b c d e f g", "z1 z2 z3 z4 z5 z6"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id long, text string")
+    got = {r["id"]: (r["clean_text"], r["n_removed"])
+           for r in exact_substring_scrub(df, id_col="id", min_tokens=5).collect()}
+    want = ref_scrub(texts, min_tokens=5)
+    assert got == {i: (w[0], w[2]) for i, w in enumerate(want)}
+    assert got[0][1] > 0

@@ -7,11 +7,11 @@ plan properties the 100 TB design depends on:
    (event_id, event_type, query) — column pruning reaches ReadSchema;
 2. LWW resolve (agg strategy): partial max_by BEFORE the exchange
    (map-side combine — the scalable hot-key answer) and ONE exchange;
-3. broadcast-decomposed merge: BroadcastHashJoin on the batch side, NO
-   shuffle exchange of the target scan;
-4. fused merge: exactly ONE payload exchange, single pass over union (no
-   shuffled join; SortAggregate is expected — see the in-code note);
-5. bucket-pruned read: partition filter on bucket= dirs (partition pruning,
+3. the apply plan (``TargetTable.apply_ops``): exactly ONE payload
+   exchange, sized to the touched buckets, single pass over the union (no
+   shuffled join; SortAggregate is expected — see the in-code note), and
+   the table side read through a bucket partition filter;
+4. bucket-pruned read: partition filter on bucket= dirs (partition pruning,
    not a data filter).
 
 Run: python tools/plan_audit.py   (writes PLANS.md; exits non-zero if an
@@ -99,36 +99,19 @@ def main() -> int:
     ]
     sections.append(("LWW resolve (agg) — map-side partial combine, one exchange", p, checks))
 
-    # 3. broadcast-decomposed merge: force the broadcast path with a tiny batch
-    small = generate_events(spark, GeneratorConfig(n_events=200, n_keys=4_000, n_repos=40, seed=9))
-    os.environ["BIFROST_BROADCAST_MAX_BYTES"] = str(512 * 1024 * 1024)
-    os.environ["BIFROST_BCAST_TGT_RATIO"] = "0"  # force broadcast branch
-    resolved = resolve_lww(events_to_ops(small)).persist()
-    resolved.count()
-    tgt = table.read(include_deleted=True)
-    joined = tgt.alias("t").join(
-        F.broadcast(resolved.alias("s")), on=["repo", "path"], how="left_outer"
-    )
-    p = formatted(joined)
-    tgt_side = p.split("BroadcastHashJoin")[0] if "BroadcastHashJoin" in p else p
-    checks = [
-        ("BroadcastHashJoin used", "BroadcastHashJoin" in p),
-        ("no shuffle Exchange on the streamed target side",
-         "Exchange hashpartitioning" not in tgt_side),
-    ]
-    sections.append(("Broadcast-decomposed MERGE — target streams, batch broadcasts", p, checks))
-    del os.environ["BIFROST_BCAST_TGT_RATIO"]
-    resolved.unpersist()
-
-    # 4. fused merge: the PRODUCTION plan shape (union → repartition(bucket)
-    # → groupBy(bucket, pk)) — one exchange serves both the LWW aggregate
-    # and the partitionBy("bucket") write, because HashPartitioning(bucket)
+    # 3. the apply plan: union → repartition(len(touched), bucket) →
+    # groupBy(bucket, pk) — one exchange serves both the LWW aggregate and
+    # the partitionBy("bucket") write, because HashPartitioning(bucket)
     # satisfies ClusteredDistribution(bucket, repo, path) and bucket is a
-    # pure function of the PK (see _merge_fused's single-exchange note).
+    # pure function of the PK (see TargetTable._apply's single-exchange note).
     from bifrost_spark.operators.merge import bucket_expr
 
-    fused_src = events_to_ops(events)
-    tgt_ops = table.read(include_deleted=True).select(
+    touched = [1, 2, 5]
+    fused_src = events_to_ops(events).select(
+        "repo", "path", "op", "commit", "lang", "content", "event_id", "seq",
+        bucket_expr(table.n_buckets).alias("bucket"),
+    ).filter(F.col("bucket").isin(touched))
+    tgt_ops = table.read(buckets=touched, include_deleted=True).select(
         "repo", "path",
         F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
         "commit", "lang", "content",
@@ -137,14 +120,9 @@ def main() -> int:
         .cast("long").alias("seq"),
         F.col("bucket"),
     )
-    val = F.struct("op", "commit", "lang", "content", "event_id")
-    fused = (
-        fused_src.select("repo", "path", "op", "commit", "lang", "content", "event_id", "seq",
-                         bucket_expr(table.n_buckets).alias("bucket"))
-        .unionByName(tgt_ops)
-        .repartition(2 * table.n_buckets, "bucket")
-        .groupBy("bucket", "repo", "path")
-        .agg(F.max_by(val, F.col("seq")).alias("v"))
+    fused = resolve_lww(
+        fused_src.unionByName(tgt_ops).repartition(len(touched), "bucket"),
+        keys=["bucket", "repo", "path"], payload=["op", "commit", "lang", "content", "event_id"],
     )
     p = formatted(fused)
     checks = [
@@ -155,6 +133,8 @@ def main() -> int:
          "hashpartitioning(bucket" in p),
         ("no shuffled join (union + aggregate, not full-outer SMJ)",
          n_nodes(p, "SortMergeJoin") == 0 and n_nodes(p, "ShuffledHashJoin") == 0),
+        ("the table side is read through a bucket partition filter",
+         "PartitionFilters" in p and "bucket" in p.split("PartitionFilters", 1)[1][:200]),
     ]
     # NB: SortAggregate + per-partition Sort is EXPECTED here — Spark has no
     # hash exec for struct-buffer aggregates, and measured A/B showed the
@@ -162,9 +142,9 @@ def main() -> int:
     # The partial max_by combine runs ABOVE the exchange in this shape (the
     # explicit bucket repartition is below the aggregate); the trade is one
     # whole payload exchange of the merged table deleted from the plan.
-    sections.append(("Fused LWW∪table MERGE — one exchange end-to-end (incl. write)", p, checks))
+    sections.append(("Apply plan: touched buckets ∪ batch ops — one exchange end-to-end (incl. write)", p, checks))
 
-    # 5. bucket-pruned read: partition filter, not data filter
+    # 4. bucket-pruned read: partition filter, not data filter
     pruned = table.read(buckets=[1, 2])
     p = formatted(pruned)
     checks = [
@@ -173,7 +153,7 @@ def main() -> int:
     ]
     sections.append(("Bucket-pruned table read — partition pruning", p, checks))
 
-    # 6. SimHash pairs: fingerprints computed ONCE (cached, reused by the
+    # 5. SimHash pairs: fingerprints computed ONCE (cached, reused by the
     # band join and both verify sides), band shuffle keyed on (band, value)
     from bifrost_spark.functions.cache import release_caches
     from bifrost_spark.functions.dedup import simhash_pairs
@@ -194,7 +174,7 @@ def main() -> int:
     sections.append(("SimHash near-dup pairs — cached fingerprints, narrow band shuffle", p, checks))
     release_caches()
 
-    # 7. ANN signatures via Arrow matmul: plan size is O(1) in dim (dim 768
+    # 6. ANN signatures via Arrow matmul: plan size is O(1) in dim (dim 768
     # here — the literal-expression path would be ~23k Catalyst nodes)
     import numpy as np
 
@@ -218,7 +198,7 @@ def main() -> int:
     sections.append(("LSH ANN top-k — Arrow matmul signatures, O(1) plan size at dim 768", p, checks))
     release_caches()
 
-    # 8. F8 fan-out: one narrow pass — project + generate, no shuffle, one scan
+    # 7. F8 fan-out: one narrow pass — project + generate, no shuffle, one scan
     from bifrost_spark.sinks.fanout import SinkSpec, fanout
 
     fo = fanout(events, [
@@ -260,7 +240,7 @@ def main() -> int:
     sections.append(("IVF ANN — bounded centroid seeding, broadcast cells, partial argmax", p, checks))
     release_caches()
 
-    # 9. C3 batch nearest-right scan: probes broadcast, map-side partial min
+    # 8. C3 batch nearest-right scan: probes broadcast, map-side partial min
     from bifrost_spark.pipelines.position import nearest_valid_positions
 
     nv = nearest_valid_positions(events.filter(
@@ -277,7 +257,7 @@ def main() -> int:
     ]
     sections.append(("C3 batch position audit — broadcast probes, partial min", p, checks))
 
-    # 10. doc_pipeline_v2: the composite LLM-data pipeline — feature kernel
+    # 9. doc_pipeline_v2: the composite LLM-data pipeline — feature kernel
     # evaluated ONCE (the md5 Window pins it: predicates can't push below a
     # window, so Catalyst can't inline the Arrow kernel into the gate and
     # re-evaluate it per predicate), text dropped before the window
@@ -300,7 +280,7 @@ def main() -> int:
     ]
     sections.append(("doc_pipeline_v2 — single feature eval, narrow window shuffle, broadcast anti scrub", p, checks))
 
-    # 11. dedup_substring: ExactSubstr scrub without a suffix array — the
+    # 10. dedup_substring: ExactSubstr scrub without a suffix array — the
     # global window count must be a plain linear groupBy on the 8-byte key
     # (map-side combined), the cover join key-equality only (NEVER an
     # all-pairs / nested-loop shape), and only two Arrow kernels run: the
@@ -320,7 +300,7 @@ def main() -> int:
     ]
     sections.append(("dedup_substring — linear window count, key-equality cover join", p, checks))
 
-    # 12. doc_pipeline_v3: the COMPLETE pretraining-prep chain (PII redact →
+    # 11. doc_pipeline_v3: the COMPLETE pretraining-prep chain (PII redact →
     # blocklist scrub → gates → decontam → dedup → mix → report).  The PII
     # redaction and quality gates must ride scans/projections (regexp
     # expressions, no Python), the boilerplate scrub is ONE Arrow kernel
@@ -348,7 +328,7 @@ def main() -> int:
     ]
     sections.append(("doc_pipeline_v3 — scan-stage gates, one Arrow scrub, broadcast anti, md5 dedup window", p, checks))
 
-    # 13. pq_topk: the memory-bounded ANN path — codebook seed must be a
+    # 12. pq_topk: the memory-bounded ANN path — codebook seed must be a
     # bounded TakeOrderedAndProject (never a full corpus sort), both the
     # codebook join (encode) and the LUT join (ADC scan) must be BROADCAST
     # (the float corpus never shuffles), and the two aggregates (per-(id,
