@@ -80,33 +80,41 @@ def sessionize(
             "session_seq", F.sum(_boundary(ts_col, gap_minutes, w)).over(wseq)
         )
 
-    ev = events.withColumn("_day", F.to_date(F.col(ts_col)))
-    wd = Window.partitionBy(user_col, "_day").orderBy(F.col(ts_col), F.col(tiebreak_col))
+    # internal columns carry reserved names, so an input column of the
+    # same name is never overwritten and then dropped
+    ev = events.withColumn("__bifrost_day", F.to_date(F.col(ts_col)))
+    wd = Window.partitionBy(user_col, "__bifrost_day").orderBy(F.col(ts_col), F.col(tiebreak_col))
     wdseq = wd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ev = ev.withColumn("_local_seq", F.sum(_boundary(ts_col, gap_minutes, wd)).over(wdseq))
-    per_day = ev.groupBy(user_col, "_day").agg(
-        F.min(ts_col).alias("_first_ts"),
-        F.max(ts_col).alias("_last_ts"),
-        F.max("_local_seq").alias("_k"),
+    ev = ev.withColumn("__bifrost_local_seq", F.sum(_boundary(ts_col, gap_minutes, wd)).over(wdseq))
+    per_day = ev.groupBy(user_col, "__bifrost_day").agg(
+        F.min(ts_col).alias("__bifrost_first_ts"),
+        F.max(ts_col).alias("__bifrost_last_ts"),
+        F.max("__bifrost_local_seq").alias("__bifrost_k"),
     )
-    wu = Window.partitionBy(user_col).orderBy("_day")
-    prev_last = F.lag("_last_ts").over(wu)
+    wu = Window.partitionBy(user_col).orderBy("__bifrost_day")
+    prev_last = F.lag("__bifrost_last_ts").over(wu)
     m = (
         prev_last.isNotNull()
-        & (_secs(F.col("_first_ts")) - _secs(prev_last) <= gap_minutes * 60)
+        & (_secs(F.col("__bifrost_first_ts")) - _secs(prev_last) <= gap_minutes * 60)
     ).cast("long")
     cum = wu.rowsBetween(Window.unboundedPreceding, -1)
     stitch = (
-        per_day.withColumn("_m", m)
-        .withColumn("_s_prev",
-                    F.coalesce(F.sum(F.col("_k") - F.col("_m")).over(cum), F.lit(0)))
-        .select(user_col, "_day", "_m", "_s_prev")
+        per_day.withColumn("__bifrost_m", m)
+        .withColumn("__bifrost_s_prev", F.coalesce(
+            F.sum(F.col("__bifrost_k") - F.col("__bifrost_m")).over(cum), F.lit(0)))
+        .select(F.col(user_col).alias("__bifrost_user"), F.col("__bifrost_day").alias("__bifrost_sday"),
+                "__bifrost_m", "__bifrost_s_prev")
     )
+    # null-safe keys: NULL-ts rows (a NULL day) and a NULL user are one more
+    # group to the plain window, so they must find their stitch row too
+    on = (F.col(user_col).eqNullSafe(F.col("__bifrost_user"))
+          & F.col("__bifrost_day").eqNullSafe(F.col("__bifrost_sday")))
     return (
-        ev.join(stitch, [user_col, "_day"])
+        ev.join(stitch, on)
         .withColumn("session_seq",
-                    F.col("_s_prev") + F.col("_local_seq") - F.col("_m"))
-        .drop("_day", "_local_seq", "_m", "_s_prev")
+                    F.col("__bifrost_s_prev") + F.col("__bifrost_local_seq") - F.col("__bifrost_m"))
+        .drop("__bifrost_day", "__bifrost_local_seq", "__bifrost_m", "__bifrost_s_prev",
+              "__bifrost_user", "__bifrost_sday")
     )
 
 

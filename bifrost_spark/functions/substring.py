@@ -36,6 +36,16 @@ identically on both sides, so the oracle check is exact.  ``xxhash64`` is
 the throughput default (single JVM intrinsic per window, no Python in the
 window pass).
 
+False positives: both modes take window-key equality as window equality,
+unverified.  With N distinct L-token windows and a b-bit key, about
+N^2 / 2^(b+1) window pairs collide.  For xxhash64 (b = 64) that is ~0.03
+pairs at N = 10^9 and ~2.7 million at N = 10^13 (~100 TB of text), i.e.
+~5e-7 of the windows, each collision scrubbing up to 2L tokens of text
+that only shares a key; the 62-bit poly key collides 4x as often.  Where
+that loss matters, verify the duplicated keys against the raw window
+strings (a join over the duplicated keys only) or widen the key to 128
+bits.
+
 Output is the cleaned TOKEN sequence (single-space joined): this operator
 normalizes away punctuation/casing like every token-level op in this
 package (reference scope: Bifrost has no analogue; this is part of the

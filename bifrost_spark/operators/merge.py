@@ -74,30 +74,19 @@ from bifrost_spark.schemas import LOGICAL_TYPES, PK_COLUMNS, TARGET_BASE_FIELDS
 
 BASE_COLS = [f.name for f in TARGET_BASE_FIELDS]  # repo path commit lang content last_event_id
 
+# Commit entries kept in the manifest's recent tail, and the cap on its
+# merged event_id interval set (smallest-gap compaction past it).
+APPLIED_TAIL = 256
+APPLIED_INTERVALS = 64
+# A batch whose ops-per-distinct-key ratio reaches this arms the map-side
+# pre-LWW combine (``apply_ops``).
+PRELWW_RATIO = 8
+# Parquet codec of table data writes: A/B'd on the bench replay shape at
+# local[32] (4M events, 32 buckets) — lz4 16.1 s vs snappy 17.3 s vs zstd
+# slowest, at equal file size to snappy — and lz4 keeps the fastest
+# decompression for the read-heavy side.
+WRITE_CODEC = "lz4"
 
-
-def _write_width(n_buckets: int) -> int:
-    """Post-shuffle width for bucket-partitioned writes.  Default 2×buckets:
-    hashing twice as many partitions as buckets thins collision hot spots
-    (two buckets landing on one reducer) at the cost of ~2 files/bucket;
-    A/B'd on the bench batch shape (BIFROST_WRITE_WIDTH_MULT to retune on
-    other cluster/bucket geometries).  A malformed env value falls back to
-    the default rather than crashing every write path far from the knob."""
-    try:
-        mult = int(os.environ.get("BIFROST_WRITE_WIDTH_MULT", "2"))
-    except ValueError:
-        mult = 2
-    return max(1, mult) * n_buckets
-
-
-def _write_codec() -> str:
-    """Parquet codec for table data writes.  Default lz4: A/B'd on the bench
-    replay shape at local[32] (4M events, 32 buckets) — lz4 16.1 s vs snappy
-    17.3 s vs zstd slowest, at equal file size to snappy — and lz4 keeps the
-    fastest decompression for the read-heavy side at scale.  zstd remains
-    the right pick when storage cost dominates compute (cold archives):
-    BIFROST_WRITE_CODEC=zstd."""
-    return os.environ.get("BIFROST_WRITE_CODEC", "lz4")
 
 def bucket_expr(n_buckets: int, struct: str | None = None):
     """The bucket of a row's PK; ``struct`` names a PK-carrying struct
@@ -260,16 +249,24 @@ class TargetTable:
         i = bisect.bisect_right([r[0] for r in ranges], lo) - 1
         return i >= 0 and ranges[i][1] >= hi
 
-    def _record_applied(self, st: dict, entry: dict) -> None:
-        """Append a commit entry: bounded tail + merged interval set."""
-        tail_cap = int(os.environ.get("BIFROST_APPLIED_TAIL", "256"))
-        st["applied"] = (st["applied"] + [entry])[-tail_cap:]
+    def _commit(self, st: dict, entry: dict) -> None:
+        """The one commit sequence.  ``st`` is the caller's edited copy of
+        ``self.state`` and becomes the next snapshot: ``entry`` (stamped with
+        ``committed_at`` in place) joins the applied record — the bounded
+        tail and the merged interval set — a fresh ``_state/<snap>.json`` is
+        written, the atomic CURRENT swing publishes it, and this handle
+        reloads.  A manifest that CURRENT has named is never rewritten."""
+        st["snapshot"] = self._next_snapshot()
+        entry["committed_at"] = time.time()
+        st["applied"] = (st["applied"] + [entry])[-APPLIED_TAIL:]
         st["n_commits"] = st.get("n_commits", 0) + 1
         if entry.get("min_event_id") is not None and entry.get("max_event_id") is not None:
             st["applied_ranges"] = _merge_ranges(
                 st.get("applied_ranges", []) + [[entry["min_event_id"], entry["max_event_id"]]],
-                max_intervals=int(os.environ.get("BIFROST_APPLIED_INTERVALS", "64")),
+                max_intervals=APPLIED_INTERVALS,
             )
+        self._write_snapshot(self._fs, self.path, st)
+        self._load_state()
 
     @property
     def last_event_id(self) -> int:
@@ -375,21 +372,16 @@ class TargetTable:
         if batch_id in self.state.get("bootstraps", []) or batch_id in self.applied_batch_ids:
             return {"skipped": True, "batch_id": batch_id}
         snap = self._next_snapshot()
-        out_dir = os.path.join(self.path, "data", snap)
         df = snapshot_df.withColumn("bucket", bucket_expr(self.n_buckets)).withColumn("is_deleted", F.lit(False))
         df = self.registry.align(df, self.state["schema_version"], base_cols=[*BASE_COLS, "is_deleted", "bucket"],
                                  keep_extra_map=True)
-        df.repartition(_write_width(self.n_buckets), "bucket").write.partitionBy("bucket").option("compression", _write_codec()).mode("overwrite").parquet(out_dir)
-        written = self._buckets_in(out_dir)
+        written = self._write_buckets(df, snap, rebucket=True)
         st = dict(self.state)
-        st["snapshot"] = snap
         st["schemas"] = {**st.get("schemas", {}), snap: df.schema.jsonValue()}
         st["buckets"] = {str(b): snap for b in written}
-        self._record_applied(st, {"batch_id": batch_id, "min_event_id": 0, "max_event_id": 0,
-                                  "n_ops": None, "kind": "bootstrap", "committed_at": time.time()})
         st["bootstraps"] = st.get("bootstraps", []) + [batch_id]
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": batch_id, "min_event_id": 0, "max_event_id": 0,
+                          "n_ops": None, "kind": "bootstrap"})
         return {"skipped": False, "batch_id": batch_id, "buckets": len(written)}
 
     def _append_lineage(self, entry: dict) -> None:
@@ -405,7 +397,17 @@ class TargetTable:
                 out[e["batch_id"]] = e
         return out
 
-    def _buckets_in(self, out_dir: str) -> list[int]:
+    def _write_buckets(self, df: DataFrame, snap: str, rebucket: bool = False) -> list[int]:
+        """Write ``df`` as snapshot ``snap``'s ``bucket=NN/`` dirs; return
+        the buckets written.  ``rebucket`` (whole-table
+        rewrites) first hashes the rows into 2×n_buckets partitions on
+        bucket: twice as many partitions as buckets thins collision hot
+        spots (two buckets on one reducer) at ~2 files per bucket.  The
+        apply plan's frame is already partitioned on bucket."""
+        if rebucket:
+            df = df.repartition(2 * self.n_buckets, "bucket")
+        out_dir = os.path.join(self.path, "data", snap)
+        df.write.partitionBy("bucket").option("compression", WRITE_CODEC).mode("overwrite").parquet(out_dir)
         return sorted(
             int(d.split("=", 1)[1]) for d in self._fs.listdir(out_dir) if d.startswith("bucket=")
         )
@@ -477,8 +479,7 @@ class TargetTable:
 
     def apply_ops(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
                   schema_version: int | None = None, n_ops_hint: int | None = None,
-                  n_keys_hint: int | None = None,
-                  lww_strategy: str = "agg", range_exclusive: bool = False,
+                  n_keys_hint: int | None = None, range_exclusive: bool = False,
                   gtid_set: str | None = None, touched: list[int] | None = None) -> dict:
         """Apply RAW (un-deduped) keyed ops — the table's one apply path.
 
@@ -498,10 +499,9 @@ class TargetTable:
         agg job here collects it together with whichever of the op count
         and the distinct-key estimate was not hinted.  Those two arm the
         map-side pre-LWW combine for dup-heavy (hot-key) batches: a batch
-        whose ops-per-key ratio reaches BIFROST_FUSED_PRELWW_RATIO
-        (default 8) collapses its duplicates before the exchange instead of
-        piling them onto one reducer; BIFROST_FUSED_PRELWW=1/0
-        force-overrides in either direction.
+        whose ops-per-key ratio reaches ``PRELWW_RATIO`` collapses its
+        duplicates before the exchange instead of piling them onto one
+        reducer.
         """
         self._assert_writable("apply_ops")
         if self.is_applied(batch_id, batch_range, range_exclusive):
@@ -519,40 +519,26 @@ class TargetTable:
             touched = r["touched"] if touched is None else touched
             n_ops_hint = r["n"] if n_ops_hint is None else n_ops_hint
             n_keys_hint = r["k"] if n_keys_hint is None else n_keys_hint
-        force = os.environ.get("BIFROST_FUSED_PRELWW", "").lower()
-        if force in ("1", "true", "yes"):
-            pre_lww = True
-        elif force in ("0", "false", "no"):
-            pre_lww = False
-        else:
-            ratio = float(os.environ.get("BIFROST_FUSED_PRELWW_RATIO", "8"))
-            pre_lww = bool(n_keys_hint) and n_ops_hint >= ratio * n_keys_hint
+        pre_lww = bool(n_keys_hint) and n_ops_hint >= PRELWW_RATIO * n_keys_hint
         return self._apply(ops, batch_id, batch_range, touched=touched,
-                           schema_version=schema_version, gtid_set=gtid_set,
-                           pre_lww=pre_lww, lww_strategy=lww_strategy)
+                           schema_version=schema_version, gtid_set=gtid_set, pre_lww=pre_lww)
 
-    def _apply(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
-               touched: list[int], schema_version: int | None = None,
-               gtid_set: str | None = None, pre_lww: bool = False,
-               lww_strategy: str = "agg", n_ops: int | None = None,
-               metrics: list[dict] | None = None) -> dict:
+    def _merge_plan(self, ops: DataFrame, touched: list[int], sv: int,
+                    pre_lww: bool = False) -> DataFrame:
+        """The apply plan, unexecuted: ``ops`` (all in the sorted ``touched``
+        buckets) merged with those buckets' rows into the rows to write, at
+        schema version ``sv``.  ``tools/plan_audit.py`` explains this frame."""
         from bifrost_spark.operators import lww
 
-        touched = sorted({int(b) for b in touched})
-        if not touched:
-            return self._commit_noop(batch_id, batch_range)
-        sv = self.state["schema_version"] if schema_version is None else schema_version
         extras = [n for n, _t in self.registry.extra_columns(sv)]
         payload = ["op", "commit", "lang", "content", *extras, "extra", "event_id"]
-        t0 = time.time()
-
         if pre_lww:
             # Hot-key mitigation: the single exchange below moves RAW batch
             # ops to their bucket's reducer, so a dup-heavy batch would pile
             # one key's ops onto one task.  Pre-resolving costs one extra PK
             # exchange of the BATCH ONLY (the map-side partial max_by
             # collapses a hot key to ≤1 row per map task before it moves).
-            ops = lww.resolve_lww(ops, strategy=lww_strategy)
+            ops = lww.resolve_lww(ops)
 
         # Rank = 2*seq + is_table_row: at equal seq the table row wins (the
         # strict-newer MERGE guard), and max_by never sees a tie.
@@ -588,7 +574,7 @@ class TargetTable:
             keys=["bucket", *PK_COLUMNS], payload=payload,
         )
         is_del = F.col("op") == "delete"
-        out = win.select(
+        return win.select(
             *PK_COLUMNS,
             *[F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c)
               for c in ("commit", "lang", "content")],
@@ -599,19 +585,26 @@ class TargetTable:
             F.col("bucket"),
         )
 
+    def _apply(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
+               touched: list[int], schema_version: int | None = None,
+               gtid_set: str | None = None, pre_lww: bool = False,
+               n_ops: int | None = None, metrics: list[dict] | None = None) -> dict:
         from pyspark.sql import Observation
 
+        touched = sorted({int(b) for b in touched})
+        if not touched:
+            return self._commit_noop(batch_id, batch_range)
+        sv = self.state["schema_version"] if schema_version is None else schema_version
+        t0 = time.time()
         obs = Observation(f"merge_{batch_id}")
-        out = out.observe(
+        out = self._merge_plan(ops, touched, sv, pre_lww).observe(
             obs,
             F.count(F.lit(1)).alias("rows_out"),
             F.sum(F.when(F.col("is_deleted"), 1).otherwise(0)).alias("tombstones"),
             F.max("last_event_id").alias("max_event_id"),
         )
         snap = self._next_snapshot()
-        out_dir = os.path.join(self.path, "data", snap)
-        out.write.partitionBy("bucket").option("compression", _write_codec()).mode("overwrite").parquet(out_dir)
-        written = self._buckets_in(out_dir)
+        written = self._write_buckets(out, snap)
         if not set(written) <= set(touched):
             # a bucket outside ``touched`` was written from its ops alone —
             # committing it would drop the rows the pruned read skipped
@@ -621,7 +614,6 @@ class TargetTable:
         wall_ms = (time.time() - t0) * 1000
 
         st = dict(self.state)
-        st["snapshot"] = snap
         # a touched bucket that had rows was read, so it was rewritten
         bmap = {**st["buckets"], **{str(b): snap for b in written}}
         st["buckets"] = bmap
@@ -633,11 +625,9 @@ class TargetTable:
         }
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         self._union_gtid(st, gtid_set)
-        self._record_applied(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
-                                  "max_event_id": batch_range[1], "kind": "merge",
-                                  "n_ops": n_ops, "committed_at": time.time(), "wall_ms": wall_ms})
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
+                          "max_event_id": batch_range[1], "kind": "merge",
+                          "n_ops": n_ops, "wall_ms": wall_ms})
         # Per-bucket lineage goes to an append-only sidecar, NOT the state
         # JSON: the state is rewritten on every commit, so embedding
         # O(buckets) metrics per batch would make each commit O(batches ×
@@ -652,12 +642,12 @@ class TargetTable:
                         "max_event_id": m["max_event_id"], "buckets": len(written)}]
         self._append_lineage(
             {"batch_id": batch_id, "wall_ms": wall_ms, "level": level, "metrics": metrics,
-             "bucket_rows": self._bucket_rows_from_footers(out_dir, written)}
+             "bucket_rows": self._bucket_rows_from_footers(snap, written)}
         )
         return {"skipped": False, "batch_id": batch_id, "fused": True, "pre_lww": pre_lww,
                 "buckets_rewritten": len(written), "n_ops": n_ops, "wall_ms": wall_ms}
 
-    def _bucket_rows_from_footers(self, out_dir: str, buckets: list[int],
+    def _bucket_rows_from_footers(self, snap: str, buckets: list[int],
                                   max_buckets: int = 4096) -> dict[str, int] | None:
         """Per-bucket row counts of the buckets one commit rewrote, read
         from parquet FOOTER metadata — pure driver-side pyarrow, no Spark
@@ -675,7 +665,7 @@ class TargetTable:
             return None
         out: dict[str, int] = {}
         for b in buckets:
-            d = os.path.join(out_dir, f"bucket={b}")
+            d = os.path.join(self.path, "data", snap, f"bucket={b}")
             try:
                 with os.scandir(d) as it:
                     out[str(b)] = sum(
@@ -703,19 +693,15 @@ class TargetTable:
         dl_dir = os.path.join(self.path, "_deadletter", batch_id.replace(":", "_"))
         events.write.mode("overwrite").parquet(dl_dir)
         st = dict(self.state)
-        st["snapshot"] = self._next_snapshot()
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         entry = {"batch_id": batch_id, "min_event_id": batch_range[0],
                  "max_event_id": batch_range[1], "kind": "dead_letter",
-                 "n_ops": None, "error": error[:2000],
-                 "path": dl_dir, "committed_at": time.time()}
-        self._record_applied(st, entry)
+                 "n_ops": None, "error": error[:2000], "path": dl_dir}
         # A quarantine record is the ONLY pointer to the unrepaired data, so
         # it lives in its own unbounded list — the applied tail is a bounded
-        # ring and would age it out after BIFROST_APPLIED_TAIL commits.
+        # ring and would age it out after APPLIED_TAIL commits.
         st["dead_letters"] = st.get("dead_letters", []) + [entry]
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, entry)
         return {"skipped": False, "dead_lettered": True, "batch_id": batch_id,
                 "path": dl_dir, "error": error[:500]}
 
@@ -724,12 +710,13 @@ class TargetTable:
         the bounded applied tail; entries leave via ``repair_dead_letter``)."""
         return list(self.state.get("dead_letters", []))
 
-    def repair_dead_letter(self, batch_id: str, lww_strategy: str = "agg") -> dict:
+    def repair_dead_letter(self, batch_id: str) -> dict:
         """Re-apply a quarantined batch's raw events (after offline repair /
         a fixed sink) under a fresh ``repair:`` batch id — the original id
         stays on the applied record, so exactly-once bookkeeping is intact
         and the per-key merge guard drops anything that has since been
-        superseded by newer events."""
+        superseded by newer events.  Retiring the quarantine record is a
+        commit of its own, after the repair's."""
         self._assert_writable("repair_dead_letter")
         from bifrost_spark.operators.lww import events_to_ops
 
@@ -741,15 +728,14 @@ class TargetTable:
         res = self.apply_ops(
             events_to_ops(events), batch_id=f"repair:{batch_id}",
             batch_range=(entry["min_event_id"], entry["max_event_id"]),
-            lww_strategy=lww_strategy,
         )
         # repaired → retire the quarantine record (the raw events stay on
         # disk under _deadletter/ until vacuumed by the operator)
         st = dict(self.state)
         st["dead_letters"] = [a for a in st.get("dead_letters", [])
                               if a["batch_id"] != batch_id]
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": f"retire:{batch_id}", "kind": "dead_letter_retired",
+                          "n_ops": 0})
         return res
 
     # ---------------------------------------------------------- maintenance
@@ -776,27 +762,16 @@ class TargetTable:
         cur = self.read(include_deleted=True)
         keep = cur.filter(~F.col("is_deleted") | (F.col("last_event_id") > F.lit(lwm)))
         snap = self._next_snapshot()
-        out_dir = os.path.join(self.path, "data", snap)
-        (
-            keep.repartition(_write_width(self.n_buckets), "bucket")
-            .write.partitionBy("bucket")
-            .option("compression", _write_codec())
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        written = self._buckets_in(out_dir)
+        written = self._write_buckets(keep, snap, rebucket=True)
         st = dict(self.state)
-        st["snapshot"] = snap
         st["buckets"] = {str(b): snap for b in written}
         st["schemas"] = {snap: keep.schema.jsonValue()}
         # high-water purge mark: changelog reads (operators/changes.py) from
         # a snapshot older than this would silently miss purged deletes, so
         # the manifest carries it forward for them to refuse on
         st["tombstone_lwm"] = max(st.get("tombstone_lwm", -1), lwm)
-        self._record_applied(st, {"batch_id": f"compact:{snap}", "kind": "compact", "n_ops": 0,
-                                  "tombstone_lwm": lwm, "committed_at": time.time()})
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": f"compact:{snap}", "kind": "compact", "n_ops": 0,
+                          "tombstone_lwm": lwm})
         return {"snapshot": snap, "buckets": len(written)}
 
     def vacuum(self) -> dict:
@@ -827,13 +802,9 @@ class TargetTable:
 
     def _commit_noop(self, batch_id: str, batch_range: tuple[int, int]) -> dict:
         st = dict(self.state)
-        st["snapshot"] = self._next_snapshot()
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
-        self._record_applied(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
-                                  "max_event_id": batch_range[1], "kind": "noop", "n_ops": 0,
-                                  "committed_at": time.time()})
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
+                          "max_event_id": batch_range[1], "kind": "noop", "n_ops": 0})
         return {"skipped": False, "batch_id": batch_id, "n_ops": 0}
 
     # ------------------------------------------------------------------ DDL
@@ -851,7 +822,6 @@ class TargetTable:
             return {"skipped": True, "batch_id": batch_id}
         new_v = self.registry.apply_ddl(query)
         st = dict(self.state)
-        st["snapshot"] = self._next_snapshot()
         st["registry"] = self.registry.to_dict()
         st["schema_version"] = new_v.version
         if new_v.truncated or new_v.dropped:
@@ -865,9 +835,6 @@ class TargetTable:
             # here would mark those still-unapplied pre-DDL events stale on a
             # crash-resume.  The folded merge's own commit advances it.
             st["last_event_id"] = max(st["last_event_id"], event_id)
-        self._record_applied(st, {"batch_id": batch_id, "min_event_id": event_id,
-                                  "max_event_id": event_id, "kind": "ddl", "query": query,
-                                  "n_ops": 0, "committed_at": time.time()})
-        self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._commit(st, {"batch_id": batch_id, "min_event_id": event_id,
+                          "max_event_id": event_id, "kind": "ddl", "query": query, "n_ops": 0})
         return {"skipped": False, "batch_id": batch_id, "schema_version": new_v.version}

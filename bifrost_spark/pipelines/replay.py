@@ -23,9 +23,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bifrost_spark.operators.lww import events_to_ops
+from bifrost_spark.operators.lww import events_to_ops, lww_key_expr
 from bifrost_spark.operators.merge import TargetTable, bucket_expr
 from bifrost_spark.schemas import EVENT_SCHEMA
+
+# Largest pre-DDL remainder segment (events) that ``_fold_ddl_barriers``
+# folds into the next segment; larger ones keep the strict barrier.
+DDL_FOLD_MAX = 65536
 
 
 def _touched_aggs(n_buckets: int, live=None) -> list:
@@ -34,9 +38,13 @@ def _touched_aggs(n_buckets: int, live=None) -> list:
     non-delete event and the before-image's bucket of every event that
     carries one (a delete, or an update — a PK-changing update touches
     both).  A superset of the buckets of ``events_to_ops``'s ops;
-    ``_touched`` unions the two sets of the collected row."""
+    ``_touched`` unions the two sets of the collected row.  "Carries a
+    before image" is tested on the image's PK fields, not the whole
+    struct, so nested-column pruning keeps the scan to
+    ``before:struct<repo,path>`` — never an update's or delete's payload."""
     live = F.lit(True) if live is None else live
-    has_before = (F.col("event_type") == "delete") | F.col("before").isNotNull()
+    has_before = ((F.col("event_type") == "delete")
+                  | F.col("before.repo").isNotNull() | F.col("before.path").isNotNull())
     return [
         F.collect_set(F.when(live & (F.col("event_type") != "delete"),
                              bucket_expr(n_buckets, "after"))).alias("touched_after"),
@@ -47,6 +55,26 @@ def _touched_aggs(n_buckets: int, live=None) -> list:
 
 def _touched(row) -> list[int]:
     return sorted(set(row["touched_after"]) | set(row["touched_before"]))
+
+
+def prescan_agg(events: DataFrame, n_buckets: int, live=None) -> DataFrame:
+    """The one stats aggregation a hint-less batch (or DDL-split segment)
+    runs before its merge, uncollected: over the ``live`` events, their
+    count, event_id range, distinct-key estimate and touched buckets
+    (``_touched_aggs``), plus the batch's DDL events in event_id order.
+    Column pruning keeps its scan to event_id, event_type, query and the
+    images' PK fields."""
+    live = F.lit(True) if live is None else live
+    return events.agg(
+        F.count(F.when(live, 1)).alias("n"),
+        F.min(F.when(live, F.col("event_id"))).alias("lo"),
+        F.max(F.when(live, F.col("event_id"))).alias("hi"),
+        F.approx_count_distinct(F.when(live, lww_key_expr())).alias("keys_est"),
+        F.sort_array(
+            F.collect_list(F.when(F.col("event_type") == "ddl", F.struct("event_id", "query")))
+        ).alias("ddls"),
+        *_touched_aggs(n_buckets, live),
+    )
 
 
 def _gtid_range(first: str | None, last: str | None) -> str | None:
@@ -66,7 +94,7 @@ def _gtid_range(first: str | None, last: str | None) -> str | None:
 
 
 class ReplayEngine:
-    def __init__(self, table: TargetTable, lww_strategy: str = "agg", ordered: bool = True,
+    def __init__(self, table: TargetTable, ordered: bool = True,
                  auto_compact_snapshots: int | None = None,
                  on_error: str = "fail", max_retries: int = 2):
         # ordered=True: batches arrive in global event_id order (the chunked
@@ -92,7 +120,6 @@ class ReplayEngine:
         # no duplicate effects because the commit point is the atomic
         # CURRENT swing.
         self.table = table
-        self.lww_strategy = lww_strategy
         self.ordered = ordered
         self.auto_compact_snapshots = auto_compact_snapshots
         self.on_error = on_error
@@ -173,19 +200,7 @@ class ReplayEngine:
         t0 = time.time()
         events = events.persist()
         try:
-            from bifrost_spark.operators.lww import lww_key_expr
-
-            lww_key = lww_key_expr()
-            stats = events.agg(
-                F.count(F.when(live, 1)).alias("n"),
-                F.min(F.when(live, F.col("event_id"))).alias("lo"),
-                F.max(F.when(live, F.col("event_id"))).alias("hi"),
-                F.approx_count_distinct(F.when(live, lww_key)).alias("keys_est"),
-                F.sort_array(
-                    F.collect_list(F.when(F.col("event_type") == "ddl", F.struct("event_id", "query")))
-                ).alias("ddls"),
-                *_touched_aggs(self.table.n_buckets, live),
-            ).collect()[0]
+            stats = prescan_agg(events, self.table.n_buckets, live).collect()[0]
             ddls = list(stats["ddls"])
             stats_ms = (time.time() - t0) * 1000
 
@@ -235,14 +250,9 @@ class ReplayEngine:
         (TRUNCATE/DROP/CREATE/RENAME) keep the strict barrier: their effect
         does not commute with ops ordered before them.
 
-        BIFROST_DDL_FOLD_MAX (events; default 65536, 0 disables) bounds the
-        folded remainder so large pre-DDL segments keep the conservative
-        barrier behavior."""
-        try:
-            fold_max = int(os.environ.get("BIFROST_DDL_FOLD_MAX", "65536"))
-        except ValueError:
-            fold_max = 65536
-        if fold_max <= 0 or len(items) < 3:
+        ``DDL_FOLD_MAX`` (events; 0 disables) bounds the folded remainder
+        so large pre-DDL segments keep the conservative barrier behavior."""
+        if DDL_FOLD_MAX <= 0 or len(items) < 3:
             return items
         from bifrost_spark.ddl import classify_query
 
@@ -263,7 +273,7 @@ class ReplayEngine:
             b_kind, b = out[i + 2]
             if (
                 a_kind == "seg" and d_kind == "ddl" and b_kind == "seg"
-                and a["n_data"] <= fold_max
+                and a["n_data"] <= DDL_FOLD_MAX
                 and evolution_safe(d["query"])
             ):
                 merged = {
@@ -277,7 +287,7 @@ class ReplayEngine:
                 }
                 out[i : i + 3] = [("ddl_deferred", d), ("seg", merged)]
                 # re-examine from the merged segment: it may precede another
-                # foldable DDL (but usually exceeds fold_max by now)
+                # foldable DDL (but usually exceeds DDL_FOLD_MAX by now)
                 i += 1
             else:
                 i += 1
@@ -296,12 +306,7 @@ class ReplayEngine:
         if n is None:
             if self.ordered:
                 seg = seg.filter(F.col("event_id") > F.lit(self.table.last_event_id))
-            from bifrost_spark.operators.lww import lww_key_expr
-
-            r = seg.agg(F.min("event_id").alias("lo"), F.max("event_id").alias("hi"),
-                        F.count("*").alias("n"),
-                        F.approx_count_distinct(lww_key_expr()).alias("keys_est"),
-                        *_touched_aggs(self.table.n_buckets)).collect()[0]
+            r = prescan_agg(seg, self.table.n_buckets).collect()[0]
             n, lo, hi, keys_est, touched = r["n"], r["lo"], r["hi"], r["keys_est"], _touched(r)
         if n == 0:
             return []
@@ -317,7 +322,7 @@ class ReplayEngine:
             try:
                 res = self.table.apply_ops(
                     events_to_ops(seg), batch_id=batch_id, batch_range=(lo, hi),
-                    n_ops_hint=n, n_keys_hint=keys_est, lww_strategy=self.lww_strategy,
+                    n_ops_hint=n, n_keys_hint=keys_est,
                     range_exclusive=self.ordered, gtid_set=gtid_set, touched=touched,
                 )
                 res["stats_ms"] = round(stats_ms, 1)
@@ -357,7 +362,6 @@ def replay_event_log(
     spark: SparkSession,
     log_path: str,
     table: TargetTable,
-    lww_strategy: str = "agg",
     start_chunk: int = 0,
     end_chunk: int | None = None,
     ordered: bool = True,
@@ -369,7 +373,7 @@ def replay_event_log(
     manifests (exactly-once)."""
     from bifrost_spark.metafs import load_chunk_index, metafs_for
 
-    engine = ReplayEngine(table, lww_strategy, ordered=ordered,
+    engine = ReplayEngine(table, ordered=ordered,
                           auto_compact_snapshots=auto_compact_snapshots)
     chunks = sorted(d for d in metafs_for(spark, log_path).listdir(log_path)
                     if d.startswith("chunk="))

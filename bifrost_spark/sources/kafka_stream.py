@@ -152,7 +152,6 @@ def start_kafka_cdc_stream(
     *,
     format: str = "bifrost",
     customer_json_config: CustomerJsonConfig | None = None,
-    lww_strategy: str = "agg",
     auto_compact_snapshots: int | None = None,
     query_name: str | None = None,
     metrics: bool = True,
@@ -172,7 +171,7 @@ def start_kafka_cdc_stream(
         spark, bootstrap_servers, format=format,
         customer_json_config=customer_json_config, **option_kwargs,
     )
-    engine = ReplayEngine(table, lww_strategy, ordered=False,
+    engine = ReplayEngine(table, ordered=False,
                           auto_compact_snapshots=auto_compact_snapshots)
     if query_name is None:
         import uuid

@@ -39,13 +39,12 @@ def start_cdc_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    lww_strategy: str = "agg",
     ordered: bool = False,
     auto_compact_snapshots: int | None = None,
     query_name: str | None = None,
     metrics: bool = True,
 ) -> StreamingQuery:
-    engine = ReplayEngine(table, lww_strategy, ordered=ordered,
+    engine = ReplayEngine(table, ordered=ordered,
                           auto_compact_snapshots=auto_compact_snapshots)
     if query_name is None:
         # unique per start: the metrics listener is session-global and

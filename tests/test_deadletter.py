@@ -8,6 +8,7 @@ error on record.
 import pytest
 from pyspark.sql import functions as F
 
+from bifrost_spark.operators import merge
 from bifrost_spark.operators.merge import TargetTable
 from bifrost_spark.pipelines.replay import ReplayEngine
 from bifrost_spark.schemas import EVENT_SCHEMA
@@ -92,13 +93,9 @@ def test_poison_batch_dead_letters_and_stream_proceeds(spark, tmp_path, monkeypa
 
     # the quarantine record survives the bounded applied tail (it is the
     # ONLY pointer to the unrepaired data)
-    import os
-    os.environ["BIFROST_APPLIED_TAIL"] = "4"
-    try:
-        for i in range(6):
-            engine.apply_batch(_events(spark, 150 + i * 10, 10))
-    finally:
-        os.environ.pop("BIFROST_APPLIED_TAIL")
+    monkeypatch.setattr(merge, "APPLIED_TAIL", 4)
+    for i in range(6):
+        engine.apply_batch(_events(spark, 150 + i * 10, 10))
     assert all(a.get("kind") != "dead_letter" for a in table.state["applied"])  # aged out of the tail
     assert len(table.dead_letters()) == 1  # still on the permanent record
 
@@ -111,6 +108,35 @@ def test_poison_batch_dead_letters_and_stream_proceeds(spark, tmp_path, monkeypa
     assert table.dead_letters() == []
     with pytest.raises(KeyError, match="no dead-letter record"):
         table.repair_dead_letter("merge:nope")
+
+
+def test_dead_letter_repair_never_rewrites_a_manifest(spark, tmp_path, monkeypatch):
+    """Each commit of the dead-letter → repair flow writes a fresh
+    ``_state/v*.json``: retiring the quarantine record is its own snapshot,
+    not a rewrite of the manifest that CURRENT already names."""
+    import os
+
+    table = TargetTable.create(spark, str(tmp_path / "t4"), n_buckets=4)
+    written = []
+    real_write = table._fs.write_text_atomic
+
+    def spy(path, text):
+        written.append(os.path.basename(path))
+        real_write(path, text)
+
+    monkeypatch.setattr(table._fs, "write_text_atomic", spy)
+    engine = ReplayEngine(table, on_error="dead_letter", max_retries=0)
+    engine.apply_batch(_events(spark, 0, 20))
+    with monkeypatch.context() as m:
+        m.setattr(table, "apply_ops", _FlakySink(table, fail_times=99))
+        poisoned = engine.apply_batch(_events(spark, 20, 20))[0]
+    assert poisoned["dead_lettered"] is True
+    table.repair_dead_letter(poisoned["batch_id"])
+
+    manifests = [n for n in written if n.startswith("v") and n.endswith(".json")]
+    assert len(manifests) == 4  # merge, quarantine, repair merge, retirement
+    assert len(set(manifests)) == len(manifests)
+    assert table.dead_letters() == [] and table.read().count() == 40
 
 
 def test_must_success_mode_raises(spark, tmp_path, monkeypatch):

@@ -69,54 +69,3 @@ def test_state_survives_restart(spark, tmp_path):
     n_more = more.filter(F.col("event_type").isin("insert", "update", "delete")).count()
     assert final_total == first_total + n_more
     assert glob.glob(os.path.join(out, "*.parquet"))
-
-
-def test_tws_totals_match_batch_agg_and_old_api(spark, tmp_path):
-    """The transformWithStateInPandas processor (Spark 4 successor API,
-    RocksDB state store) must produce the same running totals as both the
-    batch aggregation and the applyInPandasWithState implementation.
-
-    transformWithState's Python state-server protocol needs protobuf; this
-    container does not ship it (and installs are off), so the test SKIPS
-    where the API cannot run — the applyInPandasWithState implementation
-    (tests above) remains the verified default."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    from bifrost_spark.streaming.flow_state_tws import start_flow_counter_stream_tws
-
-    events, log = _setup(spark, tmp_path)
-    out = str(tmp_path / "counters_tws")
-    q = start_flow_counter_stream_tws(spark, log, out, str(tmp_path / "ckpt_tws"),
-                                      max_files_per_trigger=2)
-    q.processAllAvailable()
-    q.stop()
-    got = spark.read.parquet(out)
-    assert got.select("epoch").distinct().count() > 1
-    last = got.orderBy(F.desc("epoch")).limit(1).collect()[0]
-    bc = {r["event_type"]: r["n"] for r in table_counts(events).collect()}
-    assert last["total_inserts"] == bc.get("insert", 0)
-    assert last["total_updates"] == bc.get("update", 0)
-    assert last["total_deletes"] == bc.get("delete", 0)
-    assert last["total_events"] == sum(bc.values())
-    totals = [r["total_events"] for r in got.orderBy("epoch").collect()]
-    assert totals == sorted(totals)
-
-
-def test_tws_fence_fails_fast_without_protobuf(spark, tmp_path):
-    """The experimental tws entry point must raise a clear ImportError at
-    the call site when protobuf is missing — not deep inside Spark's state
-    server mid-query."""
-    import pytest as _pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        _pytest.skip("protobuf installed — fence not applicable")
-    except ImportError:
-        pass
-    from bifrost_spark.streaming.flow_state_tws import start_flow_counter_stream_tws
-
-    with _pytest.raises(ImportError, match="protobuf"):
-        start_flow_counter_stream_tws(spark, str(tmp_path / "log"), str(tmp_path / "out"),
-                                      str(tmp_path / "ckpt"))

@@ -6,6 +6,7 @@ import datetime
 import pyspark.sql.functions as F
 import pytest
 
+from bifrost_spark.operators import merge
 from bifrost_spark.operators.merge import TargetTable, bucket_expr
 from bifrost_spark.oracle import content_sha_map, sequential_apply
 from bifrost_spark.pipelines.replay import ReplayEngine
@@ -245,21 +246,17 @@ def test_fused_out_of_order_batches_commute(spark, tmp_path):
     assert s1[("r", "b")]["last_event_id"] == 22
 
 
-def test_fused_prelww_knob_equal_state(spark, tmp_path, monkeypatch):
+def test_fused_prelww_knob_equal_state(spark, tmp_path):
     """Pre-LWW on the fused path (hot-key mitigation: resolve LWW on the
     batch before the single-exchange fused union) must produce the exact
     same final state as the raw-ops fused path — and the choice is
     cost-based: a dup-heavy batch (ops >> distinct-keys estimate) enables it
-    automatically, an even batch does not, and the env knob force-overrides
-    in both directions."""
+    automatically, an even batch does not."""
     rows = [("r", "a", "upsert", f"c{i}", "py", f"v{i}", None, 10 + i) for i in range(20)]  # hot key
     rows += [("r", "b", "delete", None, None, None, None, 40),
              ("r", "c", "upsert", "c5", "go", "x1", None, 41)]
 
-    def run(tag, env=None, n_keys_hint=None, extra_rows=()):
-        monkeypatch.delenv("BIFROST_FUSED_PRELWW", raising=False)
-        if env is not None:
-            monkeypatch.setenv("BIFROST_FUSED_PRELWW", env)
+    def run(tag, n_keys_hint=None, extra_rows=()):
         t = TargetTable.create(spark, str(tmp_path / f"tp_{tag}"), n_buckets=4)
         batch = rows + list(extra_rows)
         hi = max(r[-1] for r in batch)
@@ -268,7 +265,6 @@ def test_fused_prelww_knob_equal_state(spark, tmp_path, monkeypatch):
         assert res.get("fused"), res
         return res["pre_lww"], _state(t)
 
-    on, s_forced = run("force_on", env="1")
     # size hint without a key hint: apply_ops self-estimates the distinct
     # keys (ADVICE round-3 — a lone n_ops_hint must not silently disarm the
     # guard).  This batch is 22 ops / 3 keys = 7.3 < ratio 8 → correctly off…
@@ -280,18 +276,16 @@ def test_fused_prelww_knob_equal_state(spark, tmp_path, monkeypatch):
     unhinted_on, _ = run("default_hot", extra_rows=hot_extra)
     auto_on, s_auto = run("auto", n_keys_hint=2)       # 22 ops / 2 keys > 8
     auto_off, s_even = run("even", n_keys_hint=20)     # 22 ops / 20 keys < 8
-    force_off, s_off = run("force_off", env="0", n_keys_hint=1)
 
-    assert (on, unhinted_off, unhinted_on, auto_on, auto_off, force_off) == (
-        True, False, True, True, False, False)
-    assert s_forced == s_default == s_auto == s_even == s_off
+    assert (unhinted_off, unhinted_on, auto_on, auto_off) == (False, True, True, False)
+    assert s_default == s_auto == s_even
 
 
 def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
     """The commit manifest must stay O(1) over many ordered batches (merged
     interval set), and replay-skip must survive batch ids aging out of the
     bounded tail (range containment, ordered/range-exclusive delivery)."""
-    monkeypatch.setenv("BIFROST_APPLIED_TAIL", "2")
+    monkeypatch.setattr(merge, "APPLIED_TAIL", 2)
     for i in range(6):
         lo = 2 + 4 * i
         table.merge(
@@ -409,3 +403,27 @@ def test_small_hintless_batch_job_budget(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("job-budget")
     assert res[0]["buckets_rewritten"] < 32
     assert len(jobs) <= 5, sorted(jobs)
+
+
+def test_prescan_aggs_read_no_payload(spark, tmp_path):
+    """The hint-less pre-scan and the indexed batches' key-only job read the
+    event images' PK fields only: nested-column pruning must keep every
+    payload field (commit/lang/content/extra) out of the scan's ReadSchema."""
+    import io
+    import os
+    from contextlib import redirect_stdout
+
+    from bifrost_spark.generator import GeneratorConfig, generate_events, write_event_log
+    from bifrost_spark.pipelines.replay import _touched_aggs, prescan_agg
+
+    log = str(tmp_path / "log")
+    write_event_log(generate_events(spark, GeneratorConfig(n_events=200, n_keys=50, n_repos=5, seed=3)),
+                    log, n_chunks=1)
+    events = spark.read.schema(EVENT_SCHEMA).parquet(os.path.join(log, "chunk=0000"))
+    for agg in (prescan_agg(events, 8), events.agg(*_touched_aggs(8))):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            agg.explain("formatted")
+        read = [ln for ln in buf.getvalue().splitlines() if "ReadSchema" in ln]
+        assert read and all("before:struct<repo:string,path:string>" in ln for ln in read), read
+        assert not any(f"{f}:" in ln for ln in read for f in ("commit", "lang", "content", "extra")), read

@@ -3,10 +3,9 @@ plugin-test layer (/root/reference/sdk/pluginTestData/data.go: random op
 streams tracked against an in-memory history, SURVEY.md §5 layer 2).
 
 Properties:
-1. the three LWW strategies (agg / window / salted_window) agree on any op
-   stream;
-2. the agg result equals a plain sequential fold (last op per PK wins);
-3. TargetTable.merge over ANY split of the stream into ordered batches
+1. resolve_lww equals a plain sequential fold (last op per PK wins) on any
+   op stream;
+2. TargetTable.merge over ANY split of the stream into ordered batches
    yields the same final state as one big batch (manifest/guard soundness).
 """
 
@@ -61,17 +60,12 @@ def _fold(ops):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(ops=op_streams())
 def test_lww_strategies_agree_and_match_fold(spark, ops):
-    df = _ops_df(spark, ops)
-    results = {}
-    for strat in ("hash", "agg", "window", "salted_window"):
-        out = resolve_lww(df, strategy=strat, n_salts=4)
-        results[strat] = {
-            (r["repo"], r["path"]): (r["op"], r["commit"], r["content"], r["event_id"])
-            for r in out.collect()
-        }
-    assert results["hash"] == results["agg"] == results["window"] == results["salted_window"]
+    resolved_ops = {
+        (r["repo"], r["path"]): (r["op"], r["commit"], r["content"], r["event_id"])
+        for r in resolve_lww(_ops_df(spark, ops)).collect()
+    }
     fold = _fold(ops)
-    for (r, p), resolved in results["agg"].items():
+    for (r, p), resolved in resolved_ops.items():
         op, commit, content, eid = resolved
         if fold[(r, p)] is None:
             assert op == "delete"

@@ -85,13 +85,6 @@ def test_kill_resume_and_double_replay(spark, fixtures, tmp_path):
     assert len(TargetTable(spark, p).state["applied"]) == n_applied
 
 
-def test_replay_window_strategy_same_result(spark, fixtures, tmp_path):
-    table = TargetTable.create(spark, str(tmp_path / "tbl3"), n_buckets=16)
-    table.bootstrap(fixtures["snapshot"])
-    replay_event_log(spark, fixtures["log"], table, lww_strategy="salted_window")
-    _assert_matches_oracle(table, fixtures["expected"])
-
-
 def test_oracle_self_check(fixtures):
     # sanity: oracle state is non-trivial and has deleted keys
     expected = fixtures["expected"]
@@ -136,10 +129,9 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
     the merged segment commit cannot mark the pre-DDL events stale.  State
     must equal the sequential oracle in all fold configurations, and
     non-evolution DDL (TRUNCATE) must keep the strict barrier."""
-    import os
-
     from bifrost_spark.generator import GeneratorConfig, generate_events, write_event_log
     from bifrost_spark.oracle import content_sha_map, sequential_apply
+    from bifrost_spark.pipelines import replay
     from bifrost_spark.pipelines.replay import ReplayEngine, replay_event_log
 
     cfg = GeneratorConfig(n_events=4000, n_keys=400, n_repos=10, seed=11, snapshot_keys=0,
@@ -152,7 +144,7 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
     expected = sequential_apply(events.toPandas())
 
     def run(tag, fold_max):
-        monkeypatch.setenv("BIFROST_DDL_FOLD_MAX", str(fold_max))
+        monkeypatch.setattr(replay, "DDL_FOLD_MAX", fold_max)
         t = TargetTable.create(spark, str(tmp_path / f"tbl_{tag}"), n_buckets=4)
         replay_event_log(spark, log, t)
         assert content_sha_map(t.to_pandas_sorted().reset_index(drop=True)) == content_sha_map(expected)
@@ -173,7 +165,7 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
 
     # TRUNCATE never folds: it empties the table, so pre-DDL ops must apply
     # first — assert the fold pass leaves the item order intact
-    monkeypatch.setenv("BIFROST_DDL_FOLD_MAX", "65536")  # re-enable after the nofold run
+    monkeypatch.setattr(replay, "DDL_FOLD_MAX", 65536)  # re-enable after the nofold run
     eng = ReplayEngine(t2, ordered=True)
     items = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
              ("ddl", {"event_id": 3, "query": "TRUNCATE TABLE code.repos"}),
@@ -185,4 +177,3 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
     folded = eng._fold_ddl_barriers(items2)
     assert [k for k, _ in folded] == ["ddl_deferred", "seg"]
     assert folded[1][1]["lo"] == 2 and folded[1][1]["hi"] == 100 and folded[1][1]["n_data"] == 50
-    os.environ.pop("BIFROST_DDL_FOLD_MAX", None)

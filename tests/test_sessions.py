@@ -118,7 +118,9 @@ def test_session_stats_single_shuffle(spark, tmp_path):
 def test_salted_sessionize_equals_plain(spark):
     """salt_days=True (hot-entity two-level stitch) must be event-for-event
     identical to the plain single-window form — including sessions that
-    span one or several midnights, multi-day gaps, and tied timestamps."""
+    span one or several midnights, multi-day gaps, tied timestamps, NULL
+    timestamps, a NULL user, and input columns that share a name with its
+    internals."""
     import random
 
     from bifrost_spark.functions.sessions import session_stats, sessionize
@@ -144,13 +146,19 @@ def test_salted_sessionize_equals_plain(spark):
             if rng.random() < 0.1:  # tied timestamp, tiebreak on event_id
                 rows.append((eid, t, user, "c", 1.0))
                 eid += 1
+    # NULL timestamps (their own sessions, first in the plain window's order)
+    # and a NULL user (one more entity to the plain window) across midnight
+    rows += [(eid + i, None, user, "c", 1.0) for i, user in enumerate((0, 0, 3))]
+    rows += [(eid + 3 + i, datetime(2026, 1, 2, 23, 40) + timedelta(minutes=15 * i), None, "c", 1.0)
+             for i in range(3)]
     df = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double")
+    # input columns named like internal columns of the salted path
+    df = df.withColumn("_day", F.lit("mine")).withColumn("_m", F.col("event_id") % 3)
 
-    plain = {(r["event_id"], r["session_seq"])
-             for r in sessionize(df).select("event_id", "session_seq").collect()}
-    salted = {(r["event_id"], r["session_seq"])
-              for r in sessionize(df, salt_days=True).select("event_id", "session_seq").collect()}
+    plain = {r["event_id"]: r.asDict() for r in sessionize(df).collect()}
+    salted = {r["event_id"]: r.asDict() for r in sessionize(df, salt_days=True).collect()}
+    assert len(plain) == len(rows)
     assert salted == plain
 
     ps = {tuple(r) for r in session_stats(df).collect()}

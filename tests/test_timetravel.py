@@ -83,16 +83,3 @@ def test_time_travel_mutations_raise_at_entry(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="read-only"):
             call()
     assert sorted(os.listdir(data_dir)) == before  # no orphan snapshot dirs
-
-
-def test_write_width_env_is_parsed_defensively(monkeypatch):
-    """ADVICE round-3: a malformed BIFROST_WRITE_WIDTH_MULT must not crash
-    every write path with a bare ValueError far from the knob."""
-    from bifrost_spark.operators.merge import _write_width
-
-    monkeypatch.setenv("BIFROST_WRITE_WIDTH_MULT", "not-an-int")
-    assert _write_width(8) == 16  # falls back to the default multiplier 2
-    monkeypatch.setenv("BIFROST_WRITE_WIDTH_MULT", "3")
-    assert _write_width(8) == 24
-    monkeypatch.setenv("BIFROST_WRITE_WIDTH_MULT", "-1")
-    assert _write_width(8) == 8  # clamped to ≥1 partition

@@ -3,11 +3,11 @@
 Captures `.explain("formatted")` for the engine's hot paths and asserts the
 plan properties the 100 TB design depends on:
 
-1. replay stats job: parquet scan reads ONLY the pruned columns
-   (event_id, event_type, query) — column pruning reaches ReadSchema;
-2. LWW resolve (agg strategy): partial max_by BEFORE the exchange
-   (map-side combine — the scalable hot-key answer) and ONE exchange;
-3. the apply plan (``TargetTable.apply_ops``): exactly ONE payload
+1. the replay pre-scan (``replay.prescan_agg``): nested-column pruning
+   keeps every payload field of the before/after images out of ReadSchema;
+2. LWW resolve: partial max_by BEFORE the exchange (map-side combine — the
+   scalable hot-key answer) and ONE exchange;
+3. the apply plan (``TargetTable._merge_plan``): exactly ONE payload
    exchange, sized to the touched buckets, single pass over the union (no
    shuffled join; SortAggregate is expected — see the in-code note), and
    the table side read through a bucket partition filter;
@@ -39,6 +39,7 @@ from bifrost_spark.generator import (  # noqa: E402
 )
 from bifrost_spark.operators.lww import events_to_ops, resolve_lww  # noqa: E402
 from bifrost_spark.operators.merge import TargetTable  # noqa: E402
+from bifrost_spark.pipelines.replay import prescan_agg  # noqa: E402
 from bifrost_spark.schemas import EVENT_SCHEMA  # noqa: E402
 from bifrost_spark.session import get_spark  # noqa: E402
 
@@ -73,58 +74,33 @@ def main() -> int:
 
     events = spark.read.schema(EVENT_SCHEMA).parquet(os.path.join(log, "chunk=0000"))
 
-    # 1. stats job column pruning
-    stats = events.agg(
-        F.count(F.when(F.col("event_type").isin("insert", "update", "delete"), 1)).alias("n"),
-        F.min("event_id").alias("lo"),
-        F.max("event_id").alias("hi"),
-        F.sort_array(F.collect_list(F.when(F.col("event_type") == "ddl", F.struct("event_id", "query")))).alias("ddls"),
-    )
-    p = formatted(stats)
-    checks = []
+    # 1. the engine's pre-scan: nested-column pruning to the images' PKs
+    p = formatted(prescan_agg(events, table.n_buckets))
     rs = [ln for ln in p.splitlines() if "ReadSchema" in ln]
-    ok = rs and all(("before" not in ln and "after" not in ln and "gtid" not in ln) for ln in rs)
-    checks.append(("ReadSchema pruned to event_id/event_type/query (no payload columns)", ok))
-    sections.append(("Replay stats job — column pruning to the scan", p, checks))
+    checks = [
+        ("ReadSchema has no payload field (commit/lang/content/extra)",
+         bool(rs) and not any(f"{f}:" in ln for ln in rs for f in ("commit", "lang", "content", "extra"))),
+    ]
+    sections.append(("Replay pre-scan — column pruning to the scan", p, checks))
 
     # 2. LWW agg: partial max_by before exchange, single exchange
     ops = events_to_ops(events)
-    lww = resolve_lww(ops, strategy="agg")
-    p = formatted(lww)
+    p = formatted(resolve_lww(ops))
     checks = [
         ("exactly one shuffle Exchange (payload moves once)",
          n_nodes(p, "Exchange") == 1),
         ("partial aggregate (map-side combine) before the exchange",
          "partial_max_by" in p),
     ]
-    sections.append(("LWW resolve (agg) — map-side partial combine, one exchange", p, checks))
+    sections.append(("LWW resolve — map-side partial combine, one exchange", p, checks))
 
     # 3. the apply plan: union → repartition(len(touched), bucket) →
     # groupBy(bucket, pk) — one exchange serves both the LWW aggregate and
     # the partitionBy("bucket") write, because HashPartitioning(bucket)
     # satisfies ClusteredDistribution(bucket, repo, path) and bucket is a
-    # pure function of the PK (see TargetTable._apply's single-exchange note).
-    from bifrost_spark.operators.merge import bucket_expr
-
-    touched = [1, 2, 5]
-    fused_src = events_to_ops(events).select(
-        "repo", "path", "op", "commit", "lang", "content", "event_id", "seq",
-        bucket_expr(table.n_buckets).alias("bucket"),
-    ).filter(F.col("bucket").isin(touched))
-    tgt_ops = table.read(buckets=touched, include_deleted=True).select(
-        "repo", "path",
-        F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
-        "commit", "lang", "content",
-        F.col("last_event_id").alias("event_id"),
-        (F.col("last_event_id") * 2 + F.when(F.col("is_deleted"), F.lit(0)).otherwise(F.lit(1)))
-        .cast("long").alias("seq"),
-        F.col("bucket"),
-    )
-    fused = resolve_lww(
-        fused_src.unionByName(tgt_ops).repartition(len(touched), "bucket"),
-        keys=["bucket", "repo", "path"], payload=["op", "commit", "lang", "content", "event_id"],
-    )
-    p = formatted(fused)
+    # pure function of the PK (see TargetTable._merge_plan's single-exchange
+    # note).
+    p = formatted(table._merge_plan(ops, [1, 2, 5], table.state["schema_version"]))
     checks = [
         ("exactly ONE shuffle Exchange for merge AND write layout "
          "(the aggregate reuses the bucket exchange; the partitioned write "
