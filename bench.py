@@ -100,16 +100,12 @@ def run_cdc_replay(spark, n_events: int, n_keys: int, n_chunks: int, workdir: st
         walls.append(time.time() - t0)
         # Per-stage decomposition from the engine's own per-batch metrics, so
         # a future regression names its stage.  On the default ordered path
-        # both "stats" and "lww_lineage" are EXPECTED to read 0: the chunk
-        # index replaces the per-batch stats agg (stats_ms=0), and the fused
-        # single-shuffle plan folds LWW into the write job itself (no
-        # separate lww_ms) — so "write" is the whole distributed apply job
-        # and "other" is manifest/state bookkeeping + driver time.  Non-zero
-        # stats/lww values appear only on the unordered path or merge().
-        ms = {"stats": 0.0, "lww_lineage": 0.0, "write": 0.0}
+        # "stats" is EXPECTED to read 0 (the chunk index replaces the
+        # per-batch stats agg), so "write" is the whole distributed apply job
+        # and "other" is manifest/state bookkeeping + driver time.
+        ms = {"stats": 0.0, "write": 0.0}
         for r in results:
             ms["stats"] += r.get("stats_ms", 0.0)
-            ms["lww_lineage"] += r.get("lww_ms", 0.0)
             ms["write"] += r.get("wall_ms", 0.0)
         ms["other"] = walls[-1] * 1000 - sum(ms.values())
         stage_splits.append({k: round(v / 1000, 3) for k, v in ms.items()})

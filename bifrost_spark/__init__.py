@@ -15,7 +15,8 @@ idiomatic Spark:
   with each table snapshot,
 - schema evolution (ADD/MODIFY/DROP COLUMN, TRUNCATE) through a versioned
   schema registry; DDL events are batch barriers,
-- per-bucket lineage + throughput metrics alongside every commit.
+- one per-batch record per commit (its manifest entry, appended to
+  ``_state/lineage.jsonl``), which ``python -m bifrost_spark status`` reads.
 
 The reference has no SQL engine or optimizer (SURVEY.md §2.4); its operators
 are dataflow ones. Each module cites the reference file:line it re-expresses.

@@ -26,6 +26,7 @@ Subcommands:
   compact    rewrite live buckets, GC tombstones below a low-water mark
   vacuum     drop orphan snapshot dirs + superseded state files
   status     print table state (snapshot, buckets, applied batches, schema)
+             and the last STATUS_RECORDS per-batch records with their events/s
 """
 
 from __future__ import annotations
@@ -36,6 +37,9 @@ import sys
 import time
 
 from bifrost_spark.session import get_spark
+
+# Per-batch records (``TargetTable.lineage``) that ``status`` prints.
+STATUS_RECORDS = 5
 
 
 def _add_gen(p: argparse.ArgumentParser) -> None:
@@ -202,6 +206,8 @@ def main(argv: list[str] | None = None) -> int:
         out["changes"] = by_type
     else:  # status
         table = TargetTable(spark, args.table, at_snapshot=args.at_snapshot)
+        recent = table.lineage()[-STATUS_RECORDS:]
+        timed = [r for r in recent if r.get("n_ops") and r.get("wall_ms")]
         out = {
             "snapshot": table.state["snapshot"],
             "n_buckets": table.n_buckets,
@@ -210,6 +216,12 @@ def main(argv: list[str] | None = None) -> int:
             "last_event_id": table.last_event_id,
             "schema_version": table.state["schema_version"],
             "rows": table.read().count(),
+            "recent": [{"kind": r.get("kind"), "batch_id": r.get("batch_id"),
+                        "event_range": [r.get("min_event_id"), r.get("max_event_id")],
+                        "n_ops": r.get("n_ops"), "wall_ms": r.get("wall_ms")} for r in recent],
+            # apply throughput of the records that carry both numbers
+            "events_per_s": round(1000 * sum(r["n_ops"] for r in timed)
+                                  / sum(r["wall_ms"] for r in timed), 1) if timed else None,
         }
     out["wall_sec"] = round(time.time() - t0, 2)
     print(json.dumps(out))

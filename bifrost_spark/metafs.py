@@ -142,7 +142,7 @@ class HadoopMetaFS:
         except Exception:
             # Object stores without append(): immutable part files instead.
             # Zero-padded nanotime prefix ⇒ name order == append order, so
-            # the sorted read below preserves last-line-wins semantics.
+            # the sorted read below preserves append order.
             part = path + f".part{time.time_ns():020d}_{uuid.uuid4().hex[:8]}"
             self._write(part, line + "\n")
 

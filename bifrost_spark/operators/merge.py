@@ -28,9 +28,10 @@ protocol gives the same guarantees a MERGE INTO an Iceberg table would:
   committed event_id ranges.  The replay check is range containment, so the
   state JSON stays **O(1)** over a 10^6-batch stream (ordered delivery makes
   the ranges contiguous → they collapse to one interval), instead of growing
-  O(batches) and being rewritten every commit.  Per-bucket lineage metrics go
-  to an append-only ``_state/lineage.jsonl`` sidecar for the same reason.
-  ``merge()`` first checks the applied set and no-ops on replay — the Spark
+  O(batches) and being rewritten every commit.  Each commit's entry is also
+  appended to ``_state/lineage.jsonl``, the table's one per-batch record
+  (``lineage()``), unbounded because the append never rewrites the state.
+  Every apply first checks the applied set and no-ops on replay — the Spark
   rebuild of the reference's LastSuccessBinlog-only-on-commit discipline
   (/root/reference/server/to_server_consume.go:133-160,
   /root/reference/server/storage.go:52-128), strengthened from
@@ -78,6 +79,9 @@ BASE_COLS = [f.name for f in TARGET_BASE_FIELDS]  # repo path commit lang conten
 # merged event_id interval set (smallest-gap compaction past it).
 APPLIED_TAIL = 256
 APPLIED_INTERVALS = 64
+# Keys every commit entry carries, whatever its kind (None where a kind has
+# no value); kinds add their own keys after these.
+RECORD_KEYS = ("batch_id", "kind", "min_event_id", "max_event_id", "n_ops", "wall_ms")
 # A batch whose ops-per-distinct-key ratio reaches this arms the map-side
 # pre-LWW combine (``apply_ops``).
 PRELWW_RATIO = 8
@@ -120,23 +124,13 @@ class TargetTable:
         # file://, ... — the ADVICE round-1 object-store follow-up
         self._fs = metafs_for(spark, path)
         self._at_snapshot = at_snapshot
-        if at_snapshot is not None:
-            def _read_only(*_a, **_kw):
-                raise RuntimeError(
-                    f"table opened read-only via time travel (at_snapshot={at_snapshot!r}); "
-                    "open without at_snapshot to write"
-                )
-            # shadows the commit point for this instance only — every
-            # mutation funnels through _write_snapshot, so one guard covers
-            # apply/merge/quarantine/repair/compact/vacuum alike
-            self._write_snapshot = _read_only
         self._load_state()
 
     def _assert_writable(self, op: str) -> None:
-        """Fail mutating entry points up front on a time-traveled handle.
-        The _write_snapshot shadow still backstops the final commit, but
-        raising at entry avoids running a whole merge job and littering
-        orphan data/<snap> dirs that only a later vacuum would reclaim."""
+        """The one read-only guard of a time-traveled handle.  ``_commit``
+        calls it as the backstop every commit passes; mutating entry points
+        call it first, so a refused call runs no Spark job and leaves no
+        orphan data/<snap> dir for a later vacuum to reclaim."""
         if self._at_snapshot is not None:
             raise RuntimeError(
                 f"{op}: table opened read-only via time travel "
@@ -251,22 +245,45 @@ class TargetTable:
 
     def _commit(self, st: dict, entry: dict) -> None:
         """The one commit sequence.  ``st`` is the caller's edited copy of
-        ``self.state`` and becomes the next snapshot: ``entry`` (stamped with
+        ``self.state`` and becomes the next snapshot: ``entry`` (completed
+        to the ``RECORD_KEYS`` shape and stamped with ``snapshot`` and
         ``committed_at`` in place) joins the applied record — the bounded
         tail and the merged interval set — a fresh ``_state/<snap>.json`` is
-        written, the atomic CURRENT swing publishes it, and this handle
-        reloads.  A manifest that CURRENT has named is never rewritten."""
-        st["snapshot"] = self._next_snapshot()
+        written, the atomic CURRENT swing publishes it, this handle reloads,
+        and the entry is appended to ``_state/lineage.jsonl``.  A manifest
+        that CURRENT has named is never rewritten.
+
+        The append follows the swing, so every line names a committed
+        snapshot and a failed commit leaves none; a crash between the two
+        leaves that one commit without its line."""
+        self._assert_writable("commit")
+        for k in RECORD_KEYS:
+            entry.setdefault(k, None)
+        st["snapshot"] = entry["snapshot"] = self._next_snapshot()
         entry["committed_at"] = time.time()
         st["applied"] = (st["applied"] + [entry])[-APPLIED_TAIL:]
         st["n_commits"] = st.get("n_commits", 0) + 1
-        if entry.get("min_event_id") is not None and entry.get("max_event_id") is not None:
+        if entry["min_event_id"] is not None and entry["max_event_id"] is not None:
             st["applied_ranges"] = _merge_ranges(
                 st.get("applied_ranges", []) + [[entry["min_event_id"], entry["max_event_id"]]],
                 max_intervals=APPLIED_INTERVALS,
             )
         self._write_snapshot(self._fs, self.path, st)
         self._load_state()
+        self._fs.append_line(self._lineage_path(), json.dumps(entry))
+
+    def _lineage_path(self) -> str:
+        return os.path.join(self.path, "_state", "lineage.jsonl")
+
+    def lineage(self) -> list[dict]:
+        """The per-batch record: one entry per commit up to this handle's
+        snapshot, in commit order, each equal to that commit's entry in the
+        manifest's ``applied`` tail — which keeps only the recent ones."""
+        recs = [json.loads(line) for line in self._fs.read_lines(self._lineage_path())
+                if line.strip()]
+        # lines from tables written before commits appended their entries
+        # carry another schema (no snapshot, kind, ...); they are kept as is
+        return [r for r in recs if r.get("snapshot", "") <= self.state["snapshot"]]
 
     @property
     def last_event_id(self) -> int:
@@ -363,6 +380,7 @@ class TargetTable:
     def bootstrap(self, snapshot_df: DataFrame, batch_id: str = "bootstrap") -> dict:
         """Initial full-sync load (reference "history", SURVEY.md §3.2):
         INSERT OVERWRITE of every bucket, event_id=0 rows."""
+        self._assert_writable("bootstrap")
         # batch-id equality ONLY: range containment of (0,0) would also
         # match any later commit touching event 0, silently skipping an
         # intentional re-bootstrap under a fresh batch_id.  Ids live in a
@@ -371,6 +389,7 @@ class TargetTable:
         # OVERWRITE replayed state.
         if batch_id in self.state.get("bootstraps", []) or batch_id in self.applied_batch_ids:
             return {"skipped": True, "batch_id": batch_id}
+        t0 = time.time()
         snap = self._next_snapshot()
         df = snapshot_df.withColumn("bucket", bucket_expr(self.n_buckets)).withColumn("is_deleted", F.lit(False))
         df = self.registry.align(df, self.state["schema_version"], base_cols=[*BASE_COLS, "is_deleted", "bucket"],
@@ -381,21 +400,8 @@ class TargetTable:
         st["buckets"] = {str(b): snap for b in written}
         st["bootstraps"] = st.get("bootstraps", []) + [batch_id]
         self._commit(st, {"batch_id": batch_id, "min_event_id": 0, "max_event_id": 0,
-                          "n_ops": None, "kind": "bootstrap"})
+                          "kind": "bootstrap", "wall_ms": (time.time() - t0) * 1000})
         return {"skipped": False, "batch_id": batch_id, "buckets": len(written)}
-
-    def _append_lineage(self, entry: dict) -> None:
-        self._fs.append_line(os.path.join(self.path, "_state", "lineage.jsonl"), json.dumps(entry))
-
-    def lineage(self) -> dict[str, dict]:
-        """Per-bucket lineage metrics by batch_id (advisory sidecar;
-        last line wins for a batch_id re-appended during crash replay)."""
-        out: dict[str, dict] = {}
-        for line in self._fs.read_lines(os.path.join(self.path, "_state", "lineage.jsonl")):
-            if line.strip():
-                e = json.loads(line)
-                out[e["batch_id"]] = e
-        return out
 
     def _write_buckets(self, df: DataFrame, snap: str, rebucket: bool = False) -> list[int]:
         """Write ``df`` as snapshot ``snap``'s ``bucket=NN/`` dirs; return
@@ -433,8 +439,7 @@ class TargetTable:
               schema_version: int | None = None, range_exclusive: bool = False,
               gtid_set: str | None = None) -> dict:
         """MERGE already LWW-resolved ops (one terminal op per PK) into the
-        table — a thin entry into ``apply_ops``'s plan, with exact per-bucket
-        lineage metrics.
+        table — a thin entry into ``apply_ops``: resolved ops are still ops.
 
         Equivalent SQL (SURVEY.md §2.3 M1):
           MERGE INTO target t USING resolved s ON t.repo=s.repo AND t.path=s.path
@@ -442,40 +447,12 @@ class TargetTable:
           WHEN MATCHED AND s.event_id > t.last_event_id THEN UPDATE SET *
           WHEN NOT MATCHED AND s.op!='delete' THEN INSERT *
         """
-        if self.is_applied(batch_id, batch_range, range_exclusive):
-            return {"skipped": True, "batch_id": batch_id}
-        t0 = time.time()
-        src = resolved
-        if "seq" not in src.columns:
-            # resolved ops are still ops: rank them the way events_to_ops does
-            src = src.withColumn(
+        if "seq" not in resolved.columns:
+            # rank them the way events_to_ops does
+            resolved = resolved.withColumn(
                 "seq", F.col("event_id") * 2 + (F.col("op") == "upsert").cast("long"))
-        src = src.persist()
-        # per-bucket lineage metrics + the touched-bucket list in ONE small
-        # job over the already-deduped source (≤1 row per key).
-        mrows = (
-            src.groupBy(bucket_expr(self.n_buckets).alias("bucket"))
-            .agg(
-                F.count("*").alias("rows_in"),
-                F.sum(F.when(F.col("op") == "upsert", 1).otherwise(0)).alias("upserts"),
-                F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-                F.min("event_id").alias("min_event_id"),
-                F.max("event_id").alias("max_event_id"),
-            )
-            .collect()
-        )
-        lww_ms = (time.time() - t0) * 1000
-        try:
-            res = self._apply(
-                src, batch_id, batch_range, touched=[r["bucket"] for r in mrows],
-                schema_version=schema_version, gtid_set=gtid_set,
-                n_ops=int(sum(r["rows_in"] for r in mrows)),
-                metrics=[r.asDict() for r in mrows],
-            )
-        finally:
-            src.unpersist()
-        res["lww_ms"] = lww_ms
-        return res
+        return self.apply_ops(resolved, batch_id, batch_range, schema_version=schema_version,
+                              range_exclusive=range_exclusive, gtid_set=gtid_set)
 
     def apply_ops(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
                   schema_version: int | None = None, n_ops_hint: int | None = None,
@@ -521,7 +498,8 @@ class TargetTable:
             n_keys_hint = r["k"] if n_keys_hint is None else n_keys_hint
         pre_lww = bool(n_keys_hint) and n_ops_hint >= PRELWW_RATIO * n_keys_hint
         return self._apply(ops, batch_id, batch_range, touched=touched,
-                           schema_version=schema_version, gtid_set=gtid_set, pre_lww=pre_lww)
+                           schema_version=schema_version, gtid_set=gtid_set, pre_lww=pre_lww,
+                           n_ops=n_ops_hint)
 
     def _merge_plan(self, ops: DataFrame, touched: list[int], sv: int,
                     pre_lww: bool = False) -> DataFrame:
@@ -588,7 +566,7 @@ class TargetTable:
     def _apply(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
                touched: list[int], schema_version: int | None = None,
                gtid_set: str | None = None, pre_lww: bool = False,
-               n_ops: int | None = None, metrics: list[dict] | None = None) -> dict:
+               n_ops: int | None = None) -> dict:
         from pyspark.sql import Observation
 
         touched = sorted({int(b) for b in touched})
@@ -625,57 +603,13 @@ class TargetTable:
         }
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         self._union_gtid(st, gtid_set)
+        m = obs.get
         self._commit(st, {"batch_id": batch_id, "min_event_id": batch_range[0],
                           "max_event_id": batch_range[1], "kind": "merge",
-                          "n_ops": n_ops, "wall_ms": wall_ms})
-        # Per-bucket lineage goes to an append-only sidecar, NOT the state
-        # JSON: the state is rewritten on every commit, so embedding
-        # O(buckets) metrics per batch would make each commit O(batches ×
-        # buckets) — unbounded at stream scale.  Lineage is advisory and
-        # appended AFTER the atomic CURRENT swing, so an entry always refers
-        # to a committed batch; the crash window is committed-without-lineage
-        # (the entry is keyed by batch_id, last line wins).
-        level = "bucket" if metrics is not None else "coarse"
-        if metrics is None:
-            m = obs.get
-            metrics = [{"rows_out": m["rows_out"], "tombstones": m["tombstones"],
-                        "max_event_id": m["max_event_id"], "buckets": len(written)}]
-        self._append_lineage(
-            {"batch_id": batch_id, "wall_ms": wall_ms, "level": level, "metrics": metrics,
-             "bucket_rows": self._bucket_rows_from_footers(snap, written)}
-        )
+                          "n_ops": n_ops, "wall_ms": wall_ms, "rows_out": m["rows_out"],
+                          "tombstones": m["tombstones"], "buckets_rewritten": len(written)})
         return {"skipped": False, "batch_id": batch_id, "fused": True, "pre_lww": pre_lww,
                 "buckets_rewritten": len(written), "n_ops": n_ops, "wall_ms": wall_ms}
-
-    def _bucket_rows_from_footers(self, snap: str, buckets: list[int],
-                                  max_buckets: int = 4096) -> dict[str, int] | None:
-        """Per-bucket row counts of the buckets one commit rewrote, read
-        from parquet FOOTER metadata — pure driver-side pyarrow, no Spark
-        job.  Capped, because a commit's cost here grows with the buckets it
-        touched: a batch that rewrites thousands of buckets keeps only the
-        coarse observe() lineage."""
-        from bifrost_spark.metafs import LocalMetaFS
-
-        if len(buckets) > max_buckets or not isinstance(self._fs, LocalMetaFS):
-            return None  # footer probing is a local-FS nicety; coarse
-            # observe() lineage stands in on object stores
-        try:
-            import pyarrow.parquet as pq
-        except ImportError:
-            return None
-        out: dict[str, int] = {}
-        for b in buckets:
-            d = os.path.join(self.path, "data", snap, f"bucket={b}")
-            try:
-                with os.scandir(d) as it:
-                    out[str(b)] = sum(
-                        pq.ParquetFile(e.path).metadata.num_rows
-                        for e in it
-                        if e.is_file() and e.name.endswith(".parquet")
-                    )
-            except (FileNotFoundError, OSError):
-                out[str(b)] = -1
-        return out
 
     def quarantine(self, events: DataFrame, batch_id: str, batch_range: tuple[int, int],
                    error: str) -> dict:
@@ -690,13 +624,14 @@ class TargetTable:
         re-applying the repaired events later goes through the normal merge
         guard, which ignores anything older than what has since landed."""
         self._assert_writable("quarantine")
+        t0 = time.time()
         dl_dir = os.path.join(self.path, "_deadletter", batch_id.replace(":", "_"))
         events.write.mode("overwrite").parquet(dl_dir)
         st = dict(self.state)
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         entry = {"batch_id": batch_id, "min_event_id": batch_range[0],
                  "max_event_id": batch_range[1], "kind": "dead_letter",
-                 "n_ops": None, "error": error[:2000], "path": dl_dir}
+                 "wall_ms": (time.time() - t0) * 1000, "error": error[:2000], "path": dl_dir}
         # A quarantine record is the ONLY pointer to the unrepaired data, so
         # it lives in its own unbounded list — the applied tail is a bounded
         # ring and would age it out after APPLIED_TAIL commits.
@@ -758,6 +693,7 @@ class TargetTable:
         only an orphan snapshot dir for ``vacuum``.
         """
         self._assert_writable("compact")
+        t0 = time.time()
         lwm = -1 if tombstone_low_water_mark is None else tombstone_low_water_mark
         cur = self.read(include_deleted=True)
         keep = cur.filter(~F.col("is_deleted") | (F.col("last_event_id") > F.lit(lwm)))
@@ -771,7 +707,7 @@ class TargetTable:
         # the manifest carries it forward for them to refuse on
         st["tombstone_lwm"] = max(st.get("tombstone_lwm", -1), lwm)
         self._commit(st, {"batch_id": f"compact:{snap}", "kind": "compact", "n_ops": 0,
-                          "tombstone_lwm": lwm})
+                          "wall_ms": (time.time() - t0) * 1000, "tombstone_lwm": lwm})
         return {"snapshot": snap, "buckets": len(written)}
 
     def vacuum(self) -> dict:
@@ -780,12 +716,7 @@ class TargetTable:
         copy-on-write commits).  Safe with live readers only under the
         single-writer assumption readers use a loaded-state handle for —
         like Iceberg's expire_snapshots, callers pick the retention moment."""
-        if self._at_snapshot is not None:
-            # vacuum deletes files without a snapshot commit, so the
-            # _write_snapshot read-only shadow doesn't cover it — guard here
-            raise RuntimeError(
-                f"table opened read-only via time travel (at_snapshot={self._at_snapshot!r}); "
-                "open without at_snapshot to vacuum")
+        self._assert_writable("vacuum")
         live = set(self.state["buckets"].values())
         data = os.path.join(self.path, "data")
         removed = []
@@ -818,11 +749,15 @@ class TargetTable:
         (/root/reference/plugin/clickhouse/src/alter_sql.go:59-330,
         /root/reference/Bristol/mysql/conn_dump.go:196-203).
         """
+        self._assert_writable("apply_ddl")
         if self.is_applied(batch_id, (event_id, event_id), range_exclusive):
             return {"skipped": True, "batch_id": batch_id}
-        new_v = self.registry.apply_ddl(query)
+        # evolve a copy: this handle's registry changes only through the
+        # commit's reload, so a failed commit leaves it as it was
+        registry = SchemaRegistry.from_dict(self.state["registry"])
+        new_v = registry.apply_ddl(query)
         st = dict(self.state)
-        st["registry"] = self.registry.to_dict()
+        st["registry"] = registry.to_dict()
         st["schema_version"] = new_v.version
         if new_v.truncated or new_v.dropped:
             # TRUNCATE empties the table; DROP TABLE additionally evicted the

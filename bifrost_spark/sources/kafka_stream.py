@@ -154,7 +154,6 @@ def start_kafka_cdc_stream(
     customer_json_config: CustomerJsonConfig | None = None,
     auto_compact_snapshots: int | None = None,
     query_name: str | None = None,
-    metrics: bool = True,
     available_now: bool = False,
     trigger_seconds: float | None = None,
     **option_kwargs: Any,
@@ -173,33 +172,16 @@ def start_kafka_cdc_stream(
     )
     engine = ReplayEngine(table, ordered=False,
                           auto_compact_snapshots=auto_compact_snapshots)
-    if query_name is None:
-        import uuid
-
-        query_name = f"bifrost_kafka_{uuid.uuid4().hex[:8]}"
-    listener = None
-    if metrics:
-        from bifrost_spark.streaming.metrics import StreamMetricsListener
-
-        listener = StreamMetricsListener(spark, table, query_name)
-        spark.streams.addListener(listener)
 
     def _apply(batch_df, epoch_id: int):  # noqa: ANN001
         engine.apply_batch(batch_df)
         engine.maybe_maintain()
 
-    writer = (
-        events.writeStream.queryName(query_name)
-        .foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    writer = events.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint_dir)
+    if query_name is not None:
+        writer = writer.queryName(query_name)
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds is not None:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    try:
-        return writer.start()
-    except Exception:
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        raise
+    return writer.start()

@@ -42,30 +42,11 @@ def start_cdc_stream(
     ordered: bool = False,
     auto_compact_snapshots: int | None = None,
     query_name: str | None = None,
-    metrics: bool = True,
 ) -> StreamingQuery:
+    """Start the stream; every commit it makes leaves its record in the
+    table's ``lineage()``, written by the commit itself."""
     engine = ReplayEngine(table, ordered=ordered,
                           auto_compact_snapshots=auto_compact_snapshots)
-    if query_name is None:
-        # unique per start: the metrics listener is session-global and
-        # filters on the query name, so a reused name would route one
-        # stream's progress into every same-named table's metrics file.
-        import uuid
-
-        query_name = f"bifrost_cdc_{uuid.uuid4().hex[:8]}"
-    listener = None
-    if metrics:
-        # throughput metrics per micro-batch → _state/stream_metrics.jsonl
-        # (the reference's flow-monitor counters, streaming/metrics.py);
-        # registered BEFORE start so the first batch is captured, and
-        # self-deregistering on query termination (no listener leak).
-        # Caller-supplied query_names reused across quick restarts can
-        # briefly overlap two live listeners (the old onQueryTerminated is
-        # async) — the default uuid name avoids that entirely.
-        from bifrost_spark.streaming.metrics import StreamMetricsListener
-
-        listener = StreamMetricsListener(spark, table, query_name)
-        spark.streams.addListener(listener)
     # NB: StructType.add mutates in place — build a copy, never touch the
     # shared EVENT_SCHEMA.
     stream_schema = T.StructType(list(EVENT_SCHEMA.fields) + [T.StructField("chunk", T.StringType())])
@@ -80,18 +61,9 @@ def start_cdc_stream(
         engine.apply_batch(batch_df)
         engine.maybe_maintain()
 
-    writer = (
-        events.writeStream.queryName(query_name)
-        .foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    writer = events.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint_dir)
+    if query_name is not None:
+        writer = writer.queryName(query_name)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    try:
-        return writer.start()
-    except Exception:
-        # start() failed → onQueryTerminated will never fire for this
-        # listener; deregister here or it leaks on the session for good.
-        if listener is not None:
-            spark.streams.removeListener(listener)
-        raise
+    return writer.start()

@@ -152,10 +152,28 @@ def test_cli_status_json(spark, tmp_path, capsys):
     cli.main(["status", "--table", tbl])
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["rows"] == 5 and out["live_buckets"] >= 1
+    assert [r["kind"] for r in out["recent"]] == ["bootstrap"] and out["events_per_s"] is None
+
+    # after a 6-chunk replay: the last STATUS_RECORDS records, all merges
+    log = str(tmp_path / "log")
+    cli.main(["generate", "--out", log, "--chunks", "6", "--files-per-chunk", "1",
+              "--n-events", "60", "--n-keys", "10"])
+    cli.main(["replay", "--log", log, "--table", tbl])
+    capsys.readouterr()
+    cli.main(["status", "--table", tbl])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    recs = TargetTable(spark, tbl).lineage()
+    assert len(recs) == 7 and len(out["recent"]) == cli.STATUS_RECORDS
+    assert out["recent"] == [
+        {"kind": "merge", "batch_id": r["batch_id"],
+         "event_range": [r["min_event_id"], r["max_event_id"]],
+         "n_ops": r["n_ops"], "wall_ms": r["wall_ms"]} for r in recs[-cli.STATUS_RECORDS:]]
+    assert sum(r["n_ops"] for r in out["recent"]) > 0 and out["events_per_s"] > 0
 
 
 def test_fused_lineage_bucket_rows(spark, tmp_path):
-    """Every apply records per-bucket row counts from parquet footers."""
+    """Every apply records, on its commit entry, the rows it wrote and the
+    buckets it rewrote."""
     table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=4)
     ops = spark.createDataFrame(
         [("r", f"p{i}", "upsert", "c", "py", f"v{i}", None, 2 * (i + 1),
@@ -166,10 +184,10 @@ def test_fused_lineage_bucket_rows(spark, tmp_path):
     )
     res = table.apply_ops(ops, batch_id="b1", batch_range=(2, 40), n_ops_hint=20)
     assert res["fused"]
-    lin = table.lineage()["b1"]
-    rows = lin["bucket_rows"]
-    assert rows is not None and sum(rows.values()) == 20
-    assert lin["metrics"][0]["rows_out"] == 20
+    (rec,) = table.lineage()
+    assert rec["batch_id"] == "b1" and rec["n_ops"] == 20
+    assert (rec["rows_out"], rec["tombstones"]) == (20, 0)
+    assert rec["buckets_rewritten"] == res["buckets_rewritten"] == len(table.state["buckets"])
 
 
 def test_auto_compact_during_replay(spark, tmp_path):

@@ -144,18 +144,38 @@ def test_truncate_clears(spark, tmp_path):
 
 
 def test_manifest_lineage_metrics(spark, table):
-    table.merge(_resolved(spark, [("r", "a", "upsert", "c1", "py", "v1", None, 2),
-                                  ("r", "b", "delete", None, None, None, None, 4)]),
-                batch_id="b1", batch_range=(2, 4))
+    """A merge's per-batch record is its manifest entry: ops in, rows and
+    tombstones written, buckets rewritten, wall time."""
+    res = table.merge(_resolved(spark, [("r", "a", "upsert", "c1", "py", "v1", None, 2),
+                                        ("r", "b", "delete", None, None, None, None, 4)]),
+                      batch_id="b1", batch_range=(2, 4))
     entry = table.state["applied"][-1]
-    assert entry["n_ops"] == 2
-    lineage = table.lineage()["b1"]
-    total = {"rows_in": 0, "upserts": 0, "deletes": 0}
-    for m in lineage["metrics"]:
-        for k in total:
-            total[k] += m[k]
-    assert total == {"rows_in": 2, "upserts": 1, "deletes": 1}
-    assert "wall_ms" in entry and "wall_ms" in lineage
+    assert table.lineage() == [entry]
+    assert entry["kind"] == "merge" and entry["n_ops"] == 2
+    # the delete of an absent key still lands, as a tombstone
+    assert (entry["rows_out"], entry["tombstones"]) == (2, 1)
+    assert entry["buckets_rewritten"] == res["buckets_rewritten"] == len(table.state["buckets"])
+    assert entry["wall_ms"] > 0
+
+
+def test_failed_ddl_commit_leaves_handle_unchanged(spark, table, monkeypatch):
+    """apply_ddl evolves a copy of the registry: a commit that fails leaves
+    the handle's registry and state as they were, and no record."""
+    import copy
+
+    def fail(*_a):
+        raise OSError("injected commit failure")
+
+    before = copy.deepcopy(table.state)
+    monkeypatch.setattr(table, "_write_snapshot", fail)
+    with pytest.raises(OSError, match="injected"):
+        table.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT", batch_id="ddl:3", event_id=3)
+    assert table.registry.current_version == 0 and table.state == before
+    assert table.lineage() == []
+    monkeypatch.undo()
+    assert table.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT",
+                           batch_id="ddl:3", event_id=3)["schema_version"] == 1
+    assert table.registry.current_version == 1 and "stars" in table.read().columns
 
 
 def test_reopen_from_disk(spark, tmp_path):

@@ -76,10 +76,15 @@ def test_time_travel_mutations_raise_at_entry(spark, tmp_path, monkeypatch):
     ops = events_to_ops(events.limit(10))
     for call in (
         lambda: old.apply_ops(ops, "tt", (1, 10)),
+        lambda: old.merge(ops, "tt3", (1, 10)),
+        lambda: old.bootstrap(ops, "tt4"),  # refused before the frame is read
+        lambda: old.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT", "ddl:9999", 9999),
         lambda: old.quarantine(events.limit(1), "tt2", (1, 2), "boom"),
         lambda: old.repair_dead_letter("tt2"),
         lambda: old.compact(),
+        lambda: old.vacuum(),
     ):
         with pytest.raises(RuntimeError, match="read-only"):
             call()
     assert sorted(os.listdir(data_dir)) == before  # no orphan snapshot dirs
+    assert old.registry.current_version == 0 and old.state["schema_version"] == 0
