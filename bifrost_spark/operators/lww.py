@@ -102,7 +102,7 @@ def resolve_lww(ops: DataFrame, keys: list[str] | None = None,
     columns carried from the winning op (default op, ``OP_PAYLOAD``,
     event_id, schema_version); the result is keys + payload + ``seq``.
     ``TargetTable.apply_ops`` runs its one merge aggregate through here with
-    keys ``(bucket, *PK)`` and the table's current columns as payload.
+    keys ``(bucket, *PK)`` and the row payload, the raw ``extra`` map among it.
 
     One-pass ``max_by(payload_struct, seq)``.  Spark plans struct-buffer
     aggregates as SortAggregate (no hash exec for non-primitive buffers),

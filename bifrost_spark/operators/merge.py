@@ -48,9 +48,14 @@ protocol gives the same guarantees a MERGE INTO an Iceberg table would:
   had already been applied and physically dropped.  Tombstones are GC-able
   at compaction time once the source low-water mark passes their event_id
   (same discipline as Iceberg positional-delete compaction).
-- **Schema evolution is metadata-only**: the registry rides in the manifest;
-  old files are never rewritten on ADD/MODIFY/DROP COLUMN — reads align
-  (null-pad / cast / prune) to the current version, like Iceberg schema ids.
+- **One physical row layout**: every data file holds ``repo, path, commit,
+  lang, content, last_event_id, is_deleted, extra`` (``bucket`` is its
+  directory).  DDL-added columns live only in the ``extra`` map, as the raw
+  strings their events carried — the reference's by-name row image
+  (/root/reference/plugin/driver/driver.go:29-45).  Schema evolution is
+  therefore metadata-only and the write path never sees a schema version:
+  the registry rides in the manifest and ``read`` types the map's values
+  at the current version (``SchemaRegistry.align``), like Iceberg schema ids.
 
 Reference semantics being reproduced: MySQL-sink REPLACE/ON-DUP-KEY/DELETE
 batch apply (/root/reference/plugin/mysql/src/mysql_normal_sync.go:16-146)
@@ -71,9 +76,17 @@ from pyspark.sql import types as T
 
 from bifrost_spark.metafs import metafs_for
 from bifrost_spark.registry import SchemaRegistry
-from bifrost_spark.schemas import LOGICAL_TYPES, PK_COLUMNS, TARGET_BASE_FIELDS
+from bifrost_spark.schemas import PK_COLUMNS, TARGET_BASE_FIELDS
 
 BASE_COLS = [f.name for f in TARGET_BASE_FIELDS]  # repo path commit lang content last_event_id
+EXTRA_TYPE = T.MapType(T.StringType(), T.StringType())
+# The one physical layout of every data file (module docstring), in column
+# order, every column nullable as the apply plan writes them; a written row
+# adds ``bucket``, the partition directory.
+FILE_SCHEMA = T.StructType([*[T.StructField(f.name, f.dataType) for f in TARGET_BASE_FIELDS],
+                            T.StructField("is_deleted", T.BooleanType()),
+                            T.StructField("extra", EXTRA_TYPE)])
+ROW_COLS = [*FILE_SCHEMA.fieldNames(), "bucket"]
 
 # Commit entries kept in the manifest's recent tail, and the cap on its
 # merged event_id interval set (smallest-gap compaction past it).
@@ -196,16 +209,19 @@ class TargetTable:
                     f"no snapshot manifest {snap!r} under {self.path}; retained: {have}")
         else:
             snap = self._fs.read_text(os.path.join(self.path, "_state", "CURRENT")).strip()
-        self.state = json.loads(self._fs.read_text(os.path.join(self.path, "_state", f"{snap}.json")))
-        # migrate pre-interval-manifest state (round-1 tables)
-        if "applied_ranges" not in self.state:
-            self.state["applied_ranges"] = _merge_ranges(
-                [a["min_event_id"], a["max_event_id"]]
-                for a in self.state["applied"]
-                if a.get("min_event_id") is not None
-            )
-            self.state["n_commits"] = len(self.state["applied"])
-        self.registry = SchemaRegistry.from_dict(self.state["registry"])
+        self._set_state(json.loads(
+            self._fs.read_text(os.path.join(self.path, "_state", f"{snap}.json"))))
+
+    def _set_state(self, state: dict) -> None:
+        if "schemas" in state:
+            # per-snapshot file schemas: the table stored DDL-added columns
+            # as typed file columns, which the one-layout read would drop
+            raise RuntimeError(
+                f"{self.path}: snapshot {state['snapshot']} was written with typed "
+                "DDL-added columns (its manifest carries a 'schemas' map); this "
+                "version keeps them in the extra map only and cannot read that table")
+        self.state = state
+        self.registry = SchemaRegistry.from_dict(state["registry"])
 
     @property
     def n_buckets(self) -> int:
@@ -249,9 +265,10 @@ class TargetTable:
         to the ``RECORD_KEYS`` shape and stamped with ``snapshot`` and
         ``committed_at`` in place) joins the applied record — the bounded
         tail and the merged interval set — a fresh ``_state/<snap>.json`` is
-        written, the atomic CURRENT swing publishes it, this handle reloads,
-        and the entry is appended to ``_state/lineage.jsonl``.  A manifest
-        that CURRENT has named is never rewritten.
+        written, the atomic CURRENT swing publishes it, this handle takes
+        the manifest it wrote (JSON round trip, no re-read), and the entry
+        is appended to ``_state/lineage.jsonl``.  A manifest that CURRENT
+        has named is never rewritten.
 
         The append follows the swing, so every line names a committed
         snapshot and a failed commit leaves none; a crash between the two
@@ -269,7 +286,7 @@ class TargetTable:
                 max_intervals=APPLIED_INTERVALS,
             )
         self._write_snapshot(self._fs, self.path, st)
-        self._load_state()
+        self._set_state(json.loads(json.dumps(st)))
         self._fs.append_line(self._lineage_path(), json.dumps(entry))
 
     def _lineage_path(self) -> str:
@@ -308,61 +325,38 @@ class TargetTable:
         return f"v{int(self.state['snapshot'][1:]) + 1:08d}"
 
     # ------------------------------------------------------------------ read
-    def _schema(self) -> T.StructType:
-        fields = list(TARGET_BASE_FIELDS)
-        for name, ltype in self.registry.extra_columns(self.state["schema_version"]):
-            fields.append(T.StructField(name, LOGICAL_TYPES.get(ltype, T.StringType())))
-        return T.StructType(fields)
-
     def _empty(self) -> DataFrame:
-        s = self._schema().add("is_deleted", T.BooleanType()).add("bucket", T.IntegerType())
-        return self.spark.createDataFrame([], s)
+        # an empty range, not createDataFrame([]): that one is a Python RDD,
+        # whose tasks start Python workers in every plan it joins
+        return self.spark.range(0, 0, 1, 1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in FILE_SCHEMA],
+            F.lit(0).alias("bucket"))
 
     def read(self, buckets: list[int] | None = None, include_deleted: bool = False) -> DataFrame:
         """Current table state (optionally pruned to a bucket subset).
 
-        Buckets written under different snapshots/schema versions are read
-        per snapshot dir and unioned with null padding, then aligned (cast /
-        prune) to the current schema version.  The ``bucket=NN`` directory
-        layout makes the bucket filter a partition prune, not a data scan.
+        ONE scan with the one file schema over exactly the
+        ``data/<snap>/bucket=NN`` directories the manifest names for the
+        wanted buckets — the pruning is the path list, so the rest of the
+        table is never listed.  Each leaf directory is its own root (Spark
+        refuses one ``basePath`` over several snapshot roots), so ``bucket``
+        is recomputed from the PK.  ``SchemaRegistry.align`` then types the
+        DDL-added columns out of the ``extra`` map at the current schema
+        version.  ``include_deleted=True`` is the internal rewrite surface
+        (merge target reads, compaction, changelogs): tombstones stay and
+        the raw map rides along.
         """
         bmap: dict[str, str] = self.state["buckets"]
-        want = {str(b) for b in buckets} if buckets is not None else set(bmap)
-        by_snap: dict[str, list[str]] = {}
-        for b, snap in bmap.items():
-            if b in want:
-                by_snap.setdefault(snap, []).append(b)
-        if not by_snap:
+        want = sorted(bmap, key=int) if buckets is None else sorted(
+            {str(b) for b in buckets} & set(bmap), key=int)
+        if not want:
             out = self._empty()
         else:
-            parts: list[DataFrame] = []
-            schemas: dict[str, dict] = self.state.get("schemas", {})
-            for snap, bs in sorted(by_snap.items()):
-                reader = self.spark.read
-                if snap in schemas:
-                    # the manifest records each snapshot's written schema —
-                    # an explicit .schema() skips the parquet footer
-                    # inference job (one driver job per snapshot per read).
-                    reader = reader.schema(T.StructType.fromJson(schemas[snap]))
-                df = reader.parquet(os.path.join(self.path, "data", snap))
-                # one SQL predicate, not one Column literal per bucket: the
-                # same partition prune at one Py4J call instead of O(buckets)
-                df = df.filter(f"bucket IN ({', '.join(str(int(x)) for x in bs)})")
-                parts.append(df)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
-            if "is_deleted" not in out.columns:
-                out = out.withColumn("is_deleted", F.lit(False))
-        # include_deleted=True is the internal rewrite surface (merge target
-        # reads, compaction): it keeps the residual ``extra`` map so values
-        # whose DDL has not been applied yet survive the copy-on-write.  The
-        # public read materializes extras (coalesced from the map) and drops
-        # the map column.
-        aligned = self.registry.align(
-            out, self.state["schema_version"], base_cols=[*BASE_COLS, "is_deleted", "bucket"],
-            keep_extra_map=include_deleted,
-        )
+            out = self.spark.read.schema(FILE_SCHEMA).parquet(
+                *[os.path.join(self.path, "data", bmap[b], f"bucket={b}") for b in want]
+            ).withColumn("bucket", bucket_expr(self.n_buckets))
+        cols = [*BASE_COLS, "is_deleted", "bucket", *(["extra"] if include_deleted else [])]
+        aligned = self.registry.align(out, self.state["schema_version"], base_cols=cols)
         if not include_deleted:
             aligned = aligned.filter(~F.col("is_deleted")).drop("is_deleted")
         return aligned
@@ -379,7 +373,9 @@ class TargetTable:
     # ------------------------------------------------------------------ write
     def bootstrap(self, snapshot_df: DataFrame, batch_id: str = "bootstrap") -> dict:
         """Initial full-sync load (reference "history", SURVEY.md §3.2):
-        INSERT OVERWRITE of every bucket, event_id=0 rows."""
+        INSERT OVERWRITE of every bucket, event_id=0 rows.  Columns of the
+        frame beyond the base payload (a state read back from a table types
+        its DDL-added columns) fold into the ``extra`` map as strings."""
         self._assert_writable("bootstrap")
         # batch-id equality ONLY: range containment of (0,0) would also
         # match any later commit touching event 0, silently skipping an
@@ -391,12 +387,24 @@ class TargetTable:
             return {"skipped": True, "batch_id": batch_id}
         t0 = time.time()
         snap = self._next_snapshot()
-        df = snapshot_df.withColumn("bucket", bucket_expr(self.n_buckets)).withColumn("is_deleted", F.lit(False))
-        df = self.registry.align(df, self.state["schema_version"], base_cols=[*BASE_COLS, "is_deleted", "bucket"],
-                                 keep_extra_map=True)
+        cols = snapshot_df.columns
+        named = [c for c in cols if c not in ROW_COLS]
+        if named and "extra" in cols:
+            raise ValueError(f"{batch_id}: snapshot carries both an extra map and "
+                             f"extra columns {named}; pass one of the two")
+        extra = F.col("extra") if "extra" in cols else F.lit(None).cast(EXTRA_TYPE)
+        if named:
+            extra = F.map_filter(
+                F.map_from_arrays(F.array(*[F.lit(c) for c in named]),
+                                  F.array(*[F.col(c).cast("string") for c in named])),
+                lambda _k, v: v.isNotNull())
+        # the union with an empty FILE_SCHEMA frame widens the frame's
+        # types to the layout's and keeps every written column nullable
+        df = self._empty().unionByName(snapshot_df.select(
+            *BASE_COLS, F.lit(False).alias("is_deleted"), extra.alias("extra"),
+            bucket_expr(self.n_buckets).alias("bucket")))
         written = self._write_buckets(df, snap, rebucket=True)
         st = dict(self.state)
-        st["schemas"] = {**st.get("schemas", {}), snap: df.schema.jsonValue()}
         st["buckets"] = {str(b): snap for b in written}
         st["bootstraps"] = st.get("bootstraps", []) + [batch_id]
         self._commit(st, {"batch_id": batch_id, "min_event_id": 0, "max_event_id": 0,
@@ -404,12 +412,13 @@ class TargetTable:
         return {"skipped": False, "batch_id": batch_id, "buckets": len(written)}
 
     def _write_buckets(self, df: DataFrame, snap: str, rebucket: bool = False) -> list[int]:
-        """Write ``df`` as snapshot ``snap``'s ``bucket=NN/`` dirs; return
-        the buckets written.  ``rebucket`` (whole-table
-        rewrites) first hashes the rows into 2×n_buckets partitions on
-        bucket: twice as many partitions as buckets thins collision hot
-        spots (two buckets on one reducer) at ~2 files per bucket.  The
-        apply plan's frame is already partitioned on bucket."""
+        """Write ``df`` as snapshot ``snap``'s ``bucket=NN/`` dirs in the one
+        file layout (``ROW_COLS``); return the buckets written.  ``rebucket``
+        (whole-table rewrites) first hashes the rows into 2×n_buckets
+        partitions on bucket: twice as many partitions as buckets thins
+        collision hot spots (two buckets on one reducer) at ~2 files per
+        bucket.  The apply plan's frame is already partitioned on bucket."""
+        df = df.select(*ROW_COLS)
         if rebucket:
             df = df.repartition(2 * self.n_buckets, "bucket")
         out_dir = os.path.join(self.path, "data", snap)
@@ -418,26 +427,8 @@ class TargetTable:
             int(d.split("=", 1)[1]) for d in self._fs.listdir(out_dir) if d.startswith("bucket=")
         )
 
-    def _materialize_extras(self, src: DataFrame, sv: int) -> DataFrame:
-        """Split an op batch's raw ``extra`` map into typed columns for every
-        extra KNOWN at schema version ``sv`` plus a residual map of the rest.
-        The residual is what makes DDL order-independent: an unordered stream
-        can deliver post-DDL events before the DDL barrier itself, and their
-        values ride the residual map until the column exists (reads coalesce
-        typed-then-map, see ``SchemaRegistry.align``)."""
-        names = [n for n, _t in self.registry.extra_columns(sv)]
-        if "extra" in src.columns:
-            for name, ltype in self.registry.extra_columns(sv):
-                src = src.withColumn(name, F.col("extra")[name].cast(LOGICAL_TYPES.get(ltype, T.StringType())))
-            if names:
-                src = src.withColumn("extra", F.map_filter(F.col("extra"), lambda k, _v: ~k.isin(*names)))
-        else:
-            src = src.withColumn("extra", F.lit(None).cast(T.MapType(T.StringType(), T.StringType())))
-        return src
-
     def merge(self, resolved: DataFrame, batch_id: str, batch_range: tuple[int, int],
-              schema_version: int | None = None, range_exclusive: bool = False,
-              gtid_set: str | None = None) -> dict:
+              range_exclusive: bool = False, gtid_set: str | None = None) -> dict:
         """MERGE already LWW-resolved ops (one terminal op per PK) into the
         table — a thin entry into ``apply_ops``: resolved ops are still ops.
 
@@ -447,17 +438,19 @@ class TargetTable:
           WHEN MATCHED AND s.event_id > t.last_event_id THEN UPDATE SET *
           WHEN NOT MATCHED AND s.op!='delete' THEN INSERT *
         """
-        if "seq" not in resolved.columns:
+        cols = resolved.columns
+        if "seq" not in cols:
             # rank them the way events_to_ops does
             resolved = resolved.withColumn(
                 "seq", F.col("event_id") * 2 + (F.col("op") == "upsert").cast("long"))
-        return self.apply_ops(resolved, batch_id, batch_range, schema_version=schema_version,
+        if "extra" not in cols:
+            resolved = resolved.withColumn("extra", F.lit(None).cast(EXTRA_TYPE))
+        return self.apply_ops(resolved, batch_id, batch_range,
                               range_exclusive=range_exclusive, gtid_set=gtid_set)
 
     def apply_ops(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
-                  schema_version: int | None = None, n_ops_hint: int | None = None,
-                  n_keys_hint: int | None = None, range_exclusive: bool = False,
-                  gtid_set: str | None = None, touched: list[int] | None = None) -> dict:
+                  n_ops_hint: int | None = None, n_keys_hint: int | None = None,
+                  range_exclusive: bool = False, gtid_set: str | None = None, touched: list[int] | None = None) -> dict:
         """Apply RAW (un-deduped) keyed ops — the table's one apply path.
 
         MERGE *is* LWW: the rows of the buckets the batch touches (read
@@ -479,6 +472,10 @@ class TargetTable:
         whose ops-per-key ratio reaches ``PRELWW_RATIO`` collapses its
         duplicates before the exchange instead of piling them onto one
         reducer.
+
+        ``ops`` carry their DDL-added values in the raw ``extra`` map, which
+        the plan moves as one payload column: LWW picks whole payloads, so
+        the merge never needs the schema version.
         """
         self._assert_writable("apply_ops")
         if self.is_applied(batch_id, batch_range, range_exclusive):
@@ -498,18 +495,15 @@ class TargetTable:
             n_keys_hint = r["k"] if n_keys_hint is None else n_keys_hint
         pre_lww = bool(n_keys_hint) and n_ops_hint >= PRELWW_RATIO * n_keys_hint
         return self._apply(ops, batch_id, batch_range, touched=touched,
-                           schema_version=schema_version, gtid_set=gtid_set, pre_lww=pre_lww,
-                           n_ops=n_ops_hint)
+                           gtid_set=gtid_set, pre_lww=pre_lww, n_ops=n_ops_hint)
 
-    def _merge_plan(self, ops: DataFrame, touched: list[int], sv: int,
-                    pre_lww: bool = False) -> DataFrame:
+    def _merge_plan(self, ops: DataFrame, touched: list[int], pre_lww: bool = False) -> DataFrame:
         """The apply plan, unexecuted: ``ops`` (all in the sorted ``touched``
-        buckets) merged with those buckets' rows into the rows to write, at
-        schema version ``sv``.  ``tools/plan_audit.py`` explains this frame."""
+        buckets) merged with those buckets' rows into the rows to write.
+        ``tools/plan_audit.py`` explains this frame."""
         from bifrost_spark.operators import lww
 
-        extras = [n for n, _t in self.registry.extra_columns(sv)]
-        payload = ["op", "commit", "lang", "content", *extras, "extra", "event_id"]
+        payload = ["op", "commit", "lang", "content", "extra", "event_id"]
         if pre_lww:
             # Hot-key mitigation: the single exchange below moves RAW batch
             # ops to their bucket's reducer, so a dup-heavy batch would pile
@@ -520,7 +514,7 @@ class TargetTable:
 
         # Rank = 2*seq + is_table_row: at equal seq the table row wins (the
         # strict-newer MERGE guard), and max_by never sees a tie.
-        src = self._materialize_extras(ops, sv).select(
+        src = ops.select(
             *PK_COLUMNS, *payload,
             (F.col("seq").cast("long") * 2).alias("seq"),
             bucket_expr(self.n_buckets).alias("bucket"),
@@ -529,7 +523,7 @@ class TargetTable:
         tgt_ops = tgt.select(
             *PK_COLUMNS,
             F.when(F.col("is_deleted"), F.lit("delete")).otherwise(F.lit("upsert")).alias("op"),
-            "commit", "lang", "content", *extras, "extra",
+            "commit", "lang", "content", "extra",
             F.col("last_event_id").alias("event_id"),
             # a live row ranks as the upsert that produced it, a tombstone
             # as its delete — the events_to_ops encoding (2e+1 / 2e)
@@ -558,28 +552,24 @@ class TargetTable:
               for c in ("commit", "lang", "content")],
             F.col("event_id").alias("last_event_id"),
             is_del.alias("is_deleted"),
-            *[F.when(is_del, F.lit(None)).otherwise(F.col(c)).alias(c) for c in extras],
             F.when(is_del, F.lit(None)).otherwise(F.col("extra")).alias("extra"),
             F.col("bucket"),
         )
 
     def _apply(self, ops: DataFrame, batch_id: str, batch_range: tuple[int, int],
-               touched: list[int], schema_version: int | None = None,
-               gtid_set: str | None = None, pre_lww: bool = False,
+               touched: list[int], gtid_set: str | None = None, pre_lww: bool = False,
                n_ops: int | None = None) -> dict:
         from pyspark.sql import Observation
 
         touched = sorted({int(b) for b in touched})
         if not touched:
             return self._commit_noop(batch_id, batch_range)
-        sv = self.state["schema_version"] if schema_version is None else schema_version
         t0 = time.time()
         obs = Observation(f"merge_{batch_id}")
-        out = self._merge_plan(ops, touched, sv, pre_lww).observe(
+        out = self._merge_plan(ops, touched, pre_lww).observe(
             obs,
             F.count(F.lit(1)).alias("rows_out"),
             F.sum(F.when(F.col("is_deleted"), 1).otherwise(0)).alias("tombstones"),
-            F.max("last_event_id").alias("max_event_id"),
         )
         snap = self._next_snapshot()
         written = self._write_buckets(out, snap)
@@ -593,14 +583,7 @@ class TargetTable:
 
         st = dict(self.state)
         # a touched bucket that had rows was read, so it was rewritten
-        bmap = {**st["buckets"], **{str(b): snap for b in written}}
-        st["buckets"] = bmap
-        live_snaps = set(bmap.values())
-        st["schemas"] = {
-            s: j
-            for s, j in {**st.get("schemas", {}), snap: out.schema.jsonValue()}.items()
-            if s in live_snaps
-        }
+        st["buckets"] = {**st["buckets"], **{str(b): snap for b in written}}
         st["last_event_id"] = max(st["last_event_id"], batch_range[1])
         self._union_gtid(st, gtid_set)
         m = obs.get
@@ -679,10 +662,9 @@ class TargetTable:
         compaction, SURVEY.md merge module docstring):
 
         - rewrites every live bucket into ONE fresh snapshot with one file
-          per bucket (merges the file droppings of many small merges);
-        - physically materializes the current schema version (old snapshots
-          written pre-DDL are null-padded/cast on read; after compaction the
-          files carry the current columns);
+          per bucket (merges the file droppings of many small merges), in
+          the one file layout: each row's ``extra`` map is copied as
+          scanned, so values of columns a later DDL adds back survive;
         - GCs tombstone rows whose ``last_event_id`` ≤ the source low-water
           mark: safe exactly when no replayable batch at-or-below the mark
           remains, because the tombstone's only job is to block a LATE
@@ -701,7 +683,6 @@ class TargetTable:
         written = self._write_buckets(keep, snap, rebucket=True)
         st = dict(self.state)
         st["buckets"] = {str(b): snap for b in written}
-        st["schemas"] = {snap: keep.schema.jsonValue()}
         # high-water purge mark: changelog reads (operators/changes.py) from
         # a snapshot older than this would silently miss purged deletes, so
         # the manifest carries it forward for them to refuse on

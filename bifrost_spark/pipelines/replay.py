@@ -5,8 +5,10 @@ This is the Spark-side equivalent of the reference's consume loop
 the bounded queue + 500-event sink transaction
 (/root/reference/plugin/mysql/src/mysql.go:482-668), and the DDL-as-barrier
 rule replaces its synthetic BEGIN/COMMIT around DDL
-(/root/reference/Bristol/mysql/conn_dump.go:242-277): a merge never mixes
-two schema versions of one table (SURVEY.md §7 "DDL barrier").
+(/root/reference/Bristol/mysql/conn_dump.go:242-277) where it still matters:
+rows carry DDL-added values by name in their ``extra`` map, so only a DDL
+that clears the table (TRUNCATE, DROP TABLE) splits a batch's merge
+(SURVEY.md §7 "DDL barrier").
 
 ``apply_batch`` takes ANY set of events (a chunk, a streaming micro-batch,
 an overlapping replay) and is idempotent: segment batch_ids derive from the
@@ -25,11 +27,8 @@ from pyspark.sql import functions as F
 
 from bifrost_spark.operators.lww import events_to_ops, lww_key_expr
 from bifrost_spark.operators.merge import TargetTable, bucket_expr
+from bifrost_spark.registry import SchemaRegistry
 from bifrost_spark.schemas import EVENT_SCHEMA
-
-# Largest pre-DDL remainder segment (events) that ``_fold_ddl_barriers``
-# folds into the next segment; larger ones keep the strict barrier.
-DDL_FOLD_MAX = 65536
 
 
 def _touched_aggs(n_buckets: int, live=None) -> list:
@@ -139,158 +138,125 @@ class ReplayEngine:
         return res
 
     def apply_batch(self, events: DataFrame, hints: dict | None = None) -> list[dict]:
-        """Apply one micro-batch: split at DDL barriers, then per segment
-        resolve-LWW + MERGE; DDLs commit as metadata-only snapshots in
-        event_id order.
+        """Apply one micro-batch: its data segments and DDLs, in event_id
+        order, with every DDL that leaves the table's rows alone folded out
+        of the way (``_fold_ddl_barriers``) — per segment resolve-LWW +
+        MERGE, DDLs as metadata-only commits.
 
         Driver-job economy (this matters for scaling efficiency — each
         driver-synchronized Spark job carries fixed scheduling latency that
         extra cores cannot reduce): with source-supplied ``hints``
-        (``{"n_data", "lo", "hi", "ddls"}`` — a binlog source knows its
-        position range and sees DDLs inline; ``write_event_log`` persists
-        them as ``_chunks.json``), the common no-DDL batch runs ZERO
-        pre-scan jobs — only the merge itself.  Without hints, ONE
-        column-pruned aggregation job yields everything the planner needs —
-        the DDL list, the live-event count, and the event_id range with the
-        stale-skip high-water mark already applied.  Hints are trusted only
-        when the whole batch is ahead of the committed high-water mark;
-        a partially-replayed batch (crash resume) falls back to the scan.
+        (``{"segments", "ddls"}`` — a binlog source knows its position
+        ranges and sees DDLs inline; ``write_event_log`` persists them as
+        ``_chunks.json``), the batch runs ZERO pre-scan jobs — only the
+        merges.  Without hints, ONE column-pruned aggregation job yields the
+        DDL list and, for the whole batch, the live-event count, event_id
+        range (stale-skip high-water mark applied), distinct-key estimate
+        and touched buckets; only segments a table-clearing DDL keeps apart
+        scan again.  Hints are trusted only when the whole batch is ahead of
+        the committed high-water mark; a partially-replayed batch (crash
+        resume) falls back to the scan.
         """
         lwm = self.table.last_event_id if self.ordered else -1
         is_data = F.col("event_type").isin("insert", "update", "delete")
         live = is_data & (F.col("event_id") > F.lit(lwm))
-        if (
-            hints is not None
-            and hints.get("segments") is not None
-            and all(s["lo"] > lwm for s in hints["segments"])
-        ):
-            # Fully-indexed batch: per-segment ranges + inline DDL list from
-            # the source — zero pre-scan jobs, no event caching, even across
-            # DDL barriers.  Items apply in event_id order (a DDL's odd id
-            # falls between the segment ranges it separates).
-            items: list[tuple[str, dict]] = [("seg", s) for s in hints["segments"]] + [
-                ("ddl", d) for d in hints.get("ddls", [])
-            ]
-            items.sort(key=lambda t: t[1]["lo"] if t[0] == "seg" else t[1]["event_id"])
+        indexed = (hints is not None and hints.get("segments") is not None
+                   and all(s["lo"] > lwm for s in hints["segments"]))
+        stats = None
+        if not indexed:
+            # Scan path (the streaming file stream, an external caller): the
+            # batch is consumed at least twice (this stats agg, then the
+            # merge), so persist it — the stats agg materializes the cache
+            # and every later consumer reads memory instead of re-scanning
+            # the source.  Also what makes the stream's numInputRows metric
+            # equal the true event count (one source scan per micro-batch).
+            events = events.persist()
+        try:
+            if indexed:
+                segs, ddls = hints["segments"], hints.get("ddls", [])
+            else:
+                t0 = time.time()
+                stats = prescan_agg(events, self.table.n_buckets, live).collect()[0]
+                stats_ms = (time.time() - t0) * 1000
+                ddls = list(stats["ddls"])
+                # the segments between the DDLs, as event_id bounds; one that
+                # misses the live events' [lo, hi] holds none of them
+                cuts = [d["event_id"] for d in ddls]
+                segs = [{"lo": lo + 1, "hi": None if hi is None else hi - 1, "n_data": None}
+                        for lo, hi in zip([-1, *cuts], [*cuts, None])
+                        if stats["n"] and lo < stats["hi"] and (hi is None or hi > stats["lo"])]
+            items = sorted([("seg", s) for s in segs] + [("ddl", d) for d in ddls],
+                           key=lambda t: t[1]["lo"] if t[0] == "seg" else t[1]["event_id"])
             items = self._fold_ddl_barriers(items)
+            seg_items = [item for kind, item in items if kind == "seg"]
+            if stats is not None and len(seg_items) == 1:
+                # no DDL keeps segments apart: the one segment is the whole
+                # batch, which the pre-scan already measured
+                seg_items[0].update(n_data=stats["n"], lo=stats["lo"], hi=stats["hi"],
+                                    keys_est=stats["keys_est"], touched=_touched(stats),
+                                    stats_ms=stats_ms)
             results: list[dict] = []
             for kind, item in items:
-                if kind == "seg":
-                    seg_df = events.filter(
-                        is_data & F.col("event_id").between(item["lo"], item["hi"])
-                    )
-                    results.extend(self._merge_segment(
-                        seg_df, n=item["n_data"], lo=item["lo"], hi=item["hi"],
-                        gtid_set=_gtid_range(item.get("gtid_first"), item.get("gtid_last")),
-                        keys_est=item.get("keys_est"),
-                    ))
-                else:
+                if kind != "seg":
                     results.append(self.table.apply_ddl(
                         item["query"], batch_id=f"ddl:{item['event_id']}",
                         event_id=item["event_id"], range_exclusive=self.ordered,
                         defer_lwm=(kind == "ddl_deferred"),
                     ))
-            return results
-        # Scan path (no source hints — the streaming file stream, an external
-        # caller): the batch is consumed at least twice (this stats agg, then
-        # the merge), so persist it — the stats agg materializes the cache
-        # and every later consumer reads memory instead of re-scanning the
-        # source.  Also what makes the stream's numInputRows metric equal
-        # the true event count (one source scan per micro-batch).
-        t0 = time.time()
-        events = events.persist()
-        try:
-            stats = prescan_agg(events, self.table.n_buckets, live).collect()[0]
-            ddls = list(stats["ddls"])
-            stats_ms = (time.time() - t0) * 1000
-
-            if not ddls:
-                return self._merge_segment(
-                    events.filter(live), n=stats["n"], lo=stats["lo"], hi=stats["hi"],
-                    stats_ms=stats_ms, keys_est=stats["keys_est"], touched=_touched(stats),
-                )
-
-            # DDL barrier path: segment the batch so a merge never mixes two
-            # schema versions of one table.  DDLs are rare; the per-segment
-            # agg is acceptable here and events stay cached across segments.
-            results: list[dict] = []
-            bounds = [-1] + [r["event_id"] for r in ddls] + [None]
-            for i in range(len(bounds) - 1):
-                lo, hi = bounds[i], bounds[i + 1]
-                seg = events.filter(live).filter(F.col("event_id") > lo)
-                if hi is not None:
-                    seg = seg.filter(F.col("event_id") < hi)
-                results.extend(self._merge_segment(seg))
-                if hi is not None:
-                    ddl = ddls[i]
-                    results.append(
-                        self.table.apply_ddl(ddl["query"], batch_id=f"ddl:{ddl['event_id']}",
-                                             event_id=ddl["event_id"], range_exclusive=self.ordered)
-                    )
+                    continue
+                seg_df = events.filter(live & (F.col("event_id") >= item["lo"]))
+                if item["hi"] is not None:
+                    seg_df = seg_df.filter(F.col("event_id") <= item["hi"])
+                results.extend(self._merge_segment(
+                    seg_df, n=item["n_data"], lo=item["lo"], hi=item["hi"],
+                    stats_ms=item.get("stats_ms", 0.0),
+                    gtid_set=_gtid_range(item.get("gtid_first"), item.get("gtid_last")),
+                    keys_est=item.get("keys_est"), touched=item.get("touched"),
+                ))
             return results
         finally:
-            events.unpersist()
+            if not indexed:
+                events.unpersist()
 
     def _fold_ddl_barriers(self, items: list[tuple[str, dict]]) -> list[tuple[str, dict]]:
-        """Collapse the [tiny pre-DDL remainder segment, schema-evolution
-        DDL, next segment] pattern into [deferred DDL, one merged segment].
+        """Collapse every [segment, DDL, segment] run into [deferred DDL,
+        one merged segment], unless the DDL clears the table's rows.
 
         A chunk boundary rarely coincides with a DDL, so a DDL mid-chunk
         leaves a remainder segment on its left — often a handful of events
         (the bench shape: ONE event) — that would otherwise pay a full merge
         commit cycle (~0.3-0.6 s of fixed driver/job cost at local[32]) for
-        almost no data.  For schema-evolution DDLs whose semantics commute
-        with the align-on-read registry (ADD/DROP/MODIFY COLUMN — a pre-DDL
-        row merged under the NEW schema version null-pads / drops / casts to
-        exactly the state sequential apply reaches), the barrier is not
-        needed for correctness: apply the DDL first (metadata-only, with the
-        high-water mark DEFERRED so a crash-resume cannot mark the pre-DDL
-        events stale — see TargetTable.apply_ddl), then merge both segments
-        as one.  Renames (CHANGE COLUMN) and table-level DDL
-        (TRUNCATE/DROP/CREATE/RENAME) keep the strict barrier: their effect
-        does not commute with ops ordered before them.
+        almost no data.  The merge never depends on the schema version —
+        rows keep their DDL-added values in the raw ``extra`` map and reads
+        type them at the current version — so a DDL commutes with the ops
+        around it: apply it first (metadata-only, with the high-water mark
+        DEFERRED so a crash-resume cannot mark the pre-DDL events stale —
+        see TargetTable.apply_ddl), then merge both segments as one.  Only
+        TRUNCATE and DROP TABLE, which clear the bucket map, keep the strict
+        barrier: the ops before them must land first and be cleared."""
 
-        ``DDL_FOLD_MAX`` (events; 0 disables) bounds the folded remainder
-        so large pre-DDL segments keep the conservative barrier behavior."""
-        if DDL_FOLD_MAX <= 0 or len(items) < 3:
-            return items
-        from bifrost_spark.ddl import classify_query
+        def clears_table(query: str) -> bool:
+            v = SchemaRegistry().apply_ddl(query)
+            return v.truncated or v.dropped
 
-        safe_kinds = {"add_column", "drop_column", "modify_column"}
-
-        def evolution_safe(query: str) -> bool:
-            op = classify_query(query)
-            if not op.is_ddl:
-                return False
-            kinds = [s.kind for s in op.sections] if op.kind == "alter_multi" else [op.kind]
-            return bool(kinds) and all(k in safe_kinds for k in kinds)
+        def plus(a: dict, b: dict, k: str):
+            return a[k] + b[k] if a.get(k) is not None and b.get(k) is not None else None
 
         out = list(items)
         i = 0
         while i + 2 < len(out):
-            a_kind, a = out[i]
-            d_kind, d = out[i + 1]
-            b_kind, b = out[i + 2]
-            if (
-                a_kind == "seg" and d_kind == "ddl" and b_kind == "seg"
-                and a["n_data"] <= DDL_FOLD_MAX
-                and evolution_safe(d["query"])
-            ):
+            (a_kind, a), (d_kind, d), (b_kind, b) = out[i : i + 3]
+            if (a_kind, d_kind, b_kind) == ("seg", "ddl", "seg") and not clears_table(d["query"]):
                 merged = {
                     "lo": a["lo"], "hi": b["hi"],
-                    "n_data": a["n_data"] + b["n_data"],
-                    "keys_est": (a["keys_est"] + b["keys_est"])
-                    if a.get("keys_est") is not None and b.get("keys_est") is not None
-                    else None,
+                    "n_data": plus(a, b, "n_data"),
+                    "keys_est": plus(a, b, "keys_est"),
                     "gtid_first": a.get("gtid_first"),
                     "gtid_last": b.get("gtid_last"),
                 }
+                # the merged segment may precede another foldable DDL
                 out[i : i + 3] = [("ddl_deferred", d), ("seg", merged)]
-                # re-examine from the merged segment: it may precede another
-                # foldable DDL (but usually exceeds DDL_FOLD_MAX by now)
-                i += 1
-            else:
-                i += 1
+            i += 1
         return out
 
     def _merge_segment(self, seg: DataFrame, n: int | None = None,

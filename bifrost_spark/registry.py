@@ -9,10 +9,13 @@ barrier: events after a DDL decode with the *new* schema.
 Here the registry is explicit and versioned: version 0 is the fixed
 north-rule payload (repo, path, commit, lang, content); each DDL op produces
 version N+1.  ``extra_columns(v)`` lists the DDL-added columns live at
-version v with their logical types; ``align(df, v)`` projects a target-table
-DataFrame onto version v's column set (pad new columns with typed nulls,
-drop removed ones, cast modified ones) — the Spark-side equivalent of the
-reference's Arrow-batch rewrite requirement.
+version v with their logical types.  The table stores those columns only as
+raw strings in its ``extra`` map, the way the reference carries every row
+image by name (/root/reference/plugin/driver/driver.go:29-45), so the
+registry is the ONE place that knows a schema version: ``align(df, v)``
+types the map's values as version v's columns on read — a column a DDL
+adds shows every value its events carried, one it drops disappears, one it
+modifies re-casts.  ``align_arrow`` is its twin for raw Arrow batches.
 
 The registry is tiny driver-side state (a handful of versions); it is
 serialized into every TargetTable snapshot so a restart resumes with the
@@ -23,9 +26,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bifrost_spark.ddl import DDLOp, classify_query
 from bifrost_spark.schemas import LOGICAL_TYPES, PAYLOAD_COLUMNS
@@ -125,48 +127,21 @@ class SchemaRegistry:
     def extra_columns(self, v: int | None = None) -> tuple[tuple[str, str], ...]:
         return (self.current if v is None else self.version(v)).extras
 
-    def typed_extra(self, name: str, ltype: str, source: Column) -> Column:
-        return source.cast(LOGICAL_TYPES.get(ltype, LOGICAL_TYPES["string"]))
-
-    def align(self, df: DataFrame, v: int | None = None, base_cols: list[str] | None = None,
-              keep_extra_map: bool = False) -> DataFrame:
-        """Project ``df`` onto schema version ``v``: base columns first, then
-        each extra column (typed-null-padded if absent, cast if present).
-        Pure projection — Catalyst folds it into the scan (column pruning).
-
-        When ``df`` carries a raw ``extra`` map column (rows written BEFORE a
-        DDL materialized a column — an unordered stream can apply post-DDL
-        events before the DDL barrier itself), each extra materializes as
-        ``coalesce(typed_col, extra[name])``: exact, because every written
-        file stores a value in exactly ONE of the two places — typed if the
-        column was known at its write-time schema version, in the residual
-        map otherwise.  ``keep_extra_map=True`` (internal rewrite paths:
-        merge target reads, bootstrap, compaction) additionally passes the
-        residual map through MINUS the keys materialized at ``v``,
-        preserving that invariant for values whose DDL has not arrived yet.
-        """
+    def align(self, df: DataFrame, v: int | None = None,
+              base_cols: list[str] | None = None) -> DataFrame:
+        """Project a table frame onto schema version ``v``: ``base_cols``
+        (default every column but the ``extra`` map) first, then each extra
+        column of ``v`` as ``extra[name]`` cast to its logical type (null
+        where a row's map lacks it).  Put ``"extra"`` in ``base_cols`` to
+        pass the raw map through.  Pure projection — Catalyst folds it into
+        the scan (column pruning)."""
         sv = self.current if v is None else self.version(v)
-        columns = df.columns  # one Py4J round trip, not one per column test
-        have = set(columns)
-        has_map = "extra" in have
-        names = [n for n, _t in sv.extras]
-        base = base_cols or [c for c in columns if c not in dict(sv.extras) and not c.startswith("_")]
-        cols: list[Column] = [F.col(c) for c in base if c in have and c != "extra"]
-        for name, ltype in sv.extras:
-            t = LOGICAL_TYPES.get(ltype, LOGICAL_TYPES["string"])
-            typed = F.col(name).cast(t) if name in have else F.lit(None).cast(t)
-            if has_map:
-                typed = F.coalesce(typed, F.col("extra")[name].cast(t))
-            cols.append(typed.alias(name))
-        if keep_extra_map:
-            if not has_map:
-                residual = F.lit(None).cast(T.MapType(T.StringType(), T.StringType()))
-            elif names:
-                residual = F.map_filter(F.col("extra"), lambda k, _v: ~k.isin(*names))
-            else:
-                residual = F.col("extra")
-            cols.append(residual.alias("extra"))
-        return df.select(*cols)
+        base = base_cols or [c for c in df.columns if c != "extra"]
+        return df.select(
+            *base,
+            *[F.col("extra")[name].cast(LOGICAL_TYPES.get(ltype, LOGICAL_TYPES["string"])).alias(name)
+              for name, ltype in sv.extras],
+        )
 
     # -- Arrow batch rewrite -------------------------------------------------
     ARROW_TYPES = {

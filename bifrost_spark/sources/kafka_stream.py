@@ -165,6 +165,7 @@ def start_kafka_cdc_stream(
     the commutative tombstone/guard merge was built for (operators/merge.py
     module docstring)."""
     from bifrost_spark.pipelines.replay import ReplayEngine
+    from bifrost_spark.streaming.job import start_engine_stream
 
     events = kafka_event_stream(
         spark, bootstrap_servers, format=format,
@@ -172,16 +173,5 @@ def start_kafka_cdc_stream(
     )
     engine = ReplayEngine(table, ordered=False,
                           auto_compact_snapshots=auto_compact_snapshots)
-
-    def _apply(batch_df, epoch_id: int):  # noqa: ANN001
-        engine.apply_batch(batch_df)
-        engine.maybe_maintain()
-
-    writer = events.writeStream.foreachBatch(_apply).option("checkpointLocation", checkpoint_dir)
-    if query_name is not None:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_engine_stream(events, engine, checkpoint_dir, query_name=query_name,
+                               available_now=available_now, trigger_seconds=trigger_seconds)

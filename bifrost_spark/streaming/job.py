@@ -23,7 +23,7 @@ by serializing DDL through its single dump thread).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -56,6 +56,23 @@ def start_cdc_stream(
         .parquet(log_path)
         .drop("chunk")
     )
+    return start_engine_stream(events, engine, checkpoint_dir, query_name=query_name,
+                               available_now=available_now)
+
+
+def start_engine_stream(
+    events: DataFrame,
+    engine: ReplayEngine,
+    checkpoint_dir: str,
+    query_name: str | None = None,
+    available_now: bool = True,
+    trigger_seconds: float | None = None,
+) -> StreamingQuery:
+    """The one stream wiring, whatever the source: every micro-batch of the
+    EVENT_SCHEMA stream ``events`` goes through ``engine.apply_batch`` and
+    its maintenance in ``foreachBatch``.  ``available_now`` drains what is
+    there and stops; otherwise ``trigger_seconds`` sets a processing-time
+    trigger (None: Spark's default, next batch as soon as one is done)."""
 
     def _apply(batch_df, epoch_id: int):  # noqa: ANN001
         engine.apply_batch(batch_df)
@@ -66,4 +83,6 @@ def start_cdc_stream(
         writer = writer.queryName(query_name)
     if available_now:
         writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()

@@ -87,16 +87,26 @@ def test_compact_gcs_tombstones_below_lwm_only(spark, tmp_path):
     assert ("r", "b") not in _state(TargetTable(spark, table.path))
 
 
-def test_compact_materializes_current_schema(spark, tmp_path):
+def test_compact_keeps_the_one_layout(spark, tmp_path):
+    """Compaction copies each row's ``extra`` map as scanned: the compacted
+    files keep the one layout (no typed ``stars`` column) and the read
+    still types ``stars`` out of the map."""
+    import pyarrow.parquet as pq
+
+    from bifrost_spark.operators.merge import FILE_SCHEMA
+
     table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=2)
     table.merge(_resolved(spark, [("r", "a", "upsert", "c", "py", "v", None, 2)]),
                 batch_id="b1", batch_range=(2, 2))
     table.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT", batch_id="ddl:3", event_id=3)
+    table.merge(_resolved(spark, [("r", "b", "upsert", "c", "py", "v", {"stars": "9"}, 4)]),
+                batch_id="b2", batch_range=(4, 4))
     table.compact()
     t2 = TargetTable(spark, table.path)
     live_snap = next(iter(set(t2.state["buckets"].values())))
-    df = spark.read.parquet(os.path.join(table.path, "data", live_snap))
-    assert "stars" in df.columns  # physically materialized, not just aligned
+    files = glob.glob(os.path.join(table.path, "data", live_snap, "bucket=*", "*.parquet"))
+    assert files and all(pq.read_schema(f).names == FILE_SCHEMA.fieldNames() for f in files)
+    assert {r["path"]: r["stars"] for r in t2.read().collect()} == {"a": None, "b": 9}
 
 
 def test_vacuum_removes_orphans(spark, tmp_path):

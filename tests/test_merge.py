@@ -329,16 +329,18 @@ def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
 
 def _events(spark, rows):
     # rows: (event_id, kind, before, after) with before/after None or
-    # (repo, path, content) -> EVENT_SCHEMA rows
+    # (repo, path, content[, extra]) -> EVENT_SCHEMA rows; a "ddl" row
+    # carries its query in place of the before image
     def image(t):
         if t is None:
             return None
         return {"repo": t[0], "path": t[1], "commit": "c", "lang": "py",
-                "content": t[2], "extra": None}
+                "content": t[2], "extra": t[3] if len(t) > 3 else None}
 
     ts = datetime.datetime(2026, 1, 1)
     return spark.createDataFrame(
-        [(eid, 1, eid, kind, "code", "repos", ts, None, None, image(b), image(a), None, 0)
+        [(eid, 1, eid, kind, "code", "repos", ts, None, None, None, None, b, 0) if kind == "ddl"
+         else (eid, 1, eid, kind, "code", "repos", ts, None, None, image(b), image(a), None, 0)
          for eid, kind, b, a in rows],
         EVENT_SCHEMA,
     )
@@ -354,8 +356,8 @@ def test_pk_change_across_buckets_rewrites_both_buckets_only(spark, tmp_path):
     """A hint-less batch whose one event is a PK-changing update moves a
     key from bucket x to bucket y: the pruned plan reads and rewrites
     exactly x and y (the before-image bucket comes from the pre-scan),
-    every other bucket keeps its snapshot directory, the manifest keeps
-    schemas only for live snapshots, and the state equals the oracle."""
+    every other bucket keeps its snapshot directory, and the state equals
+    the oracle."""
     keys = [("r", f"k{i}") for i in range(40)]
     bucket = _buckets_of(spark, keys + [("r", f"moved{i}") for i in range(40)], 8)
     src = keys[0]
@@ -376,7 +378,6 @@ def test_pk_change_across_buckets_rewrites_both_buckets_only(spark, tmp_path):
     moved = {int(b) for b, s in after.items() if before.get(b) != s}
     assert moved == {bucket[src], bucket[dst]}
     assert all(after[b] == s for b, s in before.items() if int(b) not in moved)
-    assert set(table.state["schemas"]) == set(after.values())
     expected = sequential_apply(events.toPandas(), snap.toPandas())
     actual = table.to_pandas_sorted().reset_index(drop=True)
     assert content_sha_map(actual) == content_sha_map(expected)
@@ -447,3 +448,70 @@ def test_prescan_aggs_read_no_payload(spark, tmp_path):
         read = [ln for ln in buf.getvalue().splitlines() if "ReadSchema" in ln]
         assert read and all("before:struct<repo:string,path:string>" in ln for ln in read), read
         assert not any(f"{f}:" in ln for ln in read for f in ("commit", "lang", "content", "extra")), read
+
+
+@pytest.mark.parametrize("n_buckets", [1, 64])
+def test_readded_column_value_does_not_depend_on_bucket_count(spark, tmp_path, n_buckets):
+    """One hint-less batch: ADD COLUMN x, insert A with x=5, DROP COLUMN x,
+    insert C, ADD COLUMN x again.  A's value rides its row's ``extra`` map
+    through the drop, so A.x = 5 as in the sequential oracle — whether or
+    not C's merge rewrites A's bucket (one bucket: always; 64: A and C fall
+    in different buckets)."""
+    events = _events(spark, [
+        (3, "ddl", "ALTER TABLE code.repos ADD COLUMN x INT", None),
+        (4, "insert", None, ("r", "A", "a", {"x": "5"})),
+        (5, "ddl", "ALTER TABLE code.repos DROP COLUMN x", None),
+        (6, "insert", None, ("r", "C", "c")),
+        (7, "ddl", "ALTER TABLE code.repos ADD COLUMN x INT", None),
+    ])
+    if n_buckets > 1:
+        b = _buckets_of(spark, [("r", "A"), ("r", "C")], n_buckets)
+        assert b[("r", "A")] != b[("r", "C")]
+    table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=n_buckets)
+    ReplayEngine(table).apply_batch(events)
+
+    expected = sequential_apply(events.toPandas())
+    actual = table.to_pandas_sorted().reset_index(drop=True)
+    assert expected.loc[expected["path"] == "A", "x"].tolist() == [5]
+    assert expected.equals(actual[expected.columns.tolist()])
+
+
+def test_every_file_shares_one_layout_and_read_is_one_scan(spark, tmp_path):
+    """Bootstrap, a merge, ADD COLUMN, a merge carrying the new column, a
+    hint-less batch with a DDL, then compact: every parquet file the table
+    wrote has the same schema — the one layout, DDL-added values in the
+    ``extra`` map — and a read over several live snapshots is ONE scan."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = TargetTable.create(spark, str(tmp_path / "t"), n_buckets=8)
+    table.bootstrap(spark.createDataFrame(
+        [("r", f"k{i}", "c0", "py", "base", 0) for i in range(40)],
+        "repo string, path string, commit string, lang string, content string, last_event_id long",
+    ))
+    table.merge(_resolved(spark, [("r", "k1", "upsert", "c1", "py", "v1", None, 2)]),
+                batch_id="b1", batch_range=(2, 2))
+    table.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT", batch_id="ddl:3", event_id=3)
+    table.merge(_resolved(spark, [("r", "k2", "upsert", "c2", "py", "v2", {"stars": "42"}, 4)]),
+                batch_id="b2", batch_range=(4, 4))
+    ReplayEngine(table).apply_batch(_events(spark, [
+        (6, "update", ("r", "k3", "base"), ("r", "k3", "v3", {"stars": "7"})),
+        (7, "ddl", "ALTER TABLE code.repos ADD COLUMN notes STRING", None),
+        (8, "insert", None, ("r", "new", "n", {"notes": "hi"})),
+    ]))
+
+    assert len(set(table.state["buckets"].values())) >= 3
+    p = table.read()._jdf.queryExecution().executedPlan().toString()
+    assert p.count("FileScan parquet") == 1, p
+    s = _state(table)
+    assert (s[("r", "k2")]["stars"], s[("r", "k3")]["stars"], s[("r", "new")]["notes"]) == (42, 7, "hi")
+
+    table.compact()
+    assert _state(table) == s
+    files = glob.glob(os.path.join(table.path, "data", "*", "bucket=*", "*.parquet"))
+    assert len({os.path.dirname(os.path.dirname(f)) for f in files}) >= 5
+    schemas = [pq.read_schema(f) for f in files]
+    assert all(sc.equals(schemas[0], check_metadata=True) for sc in schemas)
+    assert schemas[0].names == merge.FILE_SCHEMA.fieldNames()

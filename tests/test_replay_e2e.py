@@ -122,16 +122,15 @@ def test_chunk_index_fast_path_engages(spark, tmp_path):
     assert table.gtid_executed  # hint path also feeds the gtid view
 
 
-def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
-    """Round-4: a tiny pre-DDL remainder segment folds into the DDL commit
-    for schema-evolution DDLs — one merge cycle instead of two — with the
-    high-water mark deferred so a crash between the folded DDL commit and
-    the merged segment commit cannot mark the pre-DDL events stale.  State
-    must equal the sequential oracle in all fold configurations, and
-    non-evolution DDL (TRUNCATE) must keep the strict barrier."""
+def test_ddl_barrier_fold(spark, tmp_path):
+    """A pre-DDL remainder segment folds into the next segment across any
+    DDL that leaves the table's rows alone — one merge cycle per chunk —
+    with the high-water mark deferred so a crash between the folded DDL
+    commit and the merged segment commit cannot mark the pre-DDL events
+    stale.  State must equal the sequential oracle, and a table-clearing
+    DDL (TRUNCATE) must keep the strict barrier."""
     from bifrost_spark.generator import GeneratorConfig, generate_events, write_event_log
     from bifrost_spark.oracle import content_sha_map, sequential_apply
-    from bifrost_spark.pipelines import replay
     from bifrost_spark.pipelines.replay import ReplayEngine, replay_event_log
 
     cfg = GeneratorConfig(n_events=4000, n_keys=400, n_repos=10, seed=11, snapshot_keys=0,
@@ -143,16 +142,11 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
     write_event_log(events, log, n_chunks=4)
     expected = sequential_apply(events.toPandas())
 
-    def run(tag, fold_max):
-        monkeypatch.setattr(replay, "DDL_FOLD_MAX", fold_max)
-        t = TargetTable.create(spark, str(tmp_path / f"tbl_{tag}"), n_buckets=4)
-        replay_event_log(spark, log, t)
-        assert content_sha_map(t.to_pandas_sorted().reset_index(drop=True)) == content_sha_map(expected)
-        return [a for a in t.state["applied"] if a["kind"].startswith("merge")]
-
-    merged_on = run("fold", 65536)
-    merged_off = run("nofold", 0)
-    assert len(merged_on) == len(merged_off) - 1  # one merge cycle saved
+    t = TargetTable.create(spark, str(tmp_path / "tbl_fold"), n_buckets=4)
+    replay_event_log(spark, log, t)
+    assert content_sha_map(t.to_pandas_sorted().reset_index(drop=True)) == content_sha_map(expected)
+    merged = [a for a in t.state["applied"] if a["kind"].startswith("merge")]
+    assert len(merged) == 4  # one merge cycle per chunk: the DDL split none
 
     # deferred-lwm crash safety: apply only the folded DDL, then reopen —
     # the pre-DDL events must still be above the high-water mark
@@ -165,15 +159,16 @@ def test_ddl_barrier_fold(spark, tmp_path, monkeypatch):
 
     # TRUNCATE never folds: it empties the table, so pre-DDL ops must apply
     # first — assert the fold pass leaves the item order intact
-    monkeypatch.setattr(replay, "DDL_FOLD_MAX", 65536)  # re-enable after the nofold run
     eng = ReplayEngine(t2, ordered=True)
     items = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
              ("ddl", {"event_id": 3, "query": "TRUNCATE TABLE code.repos"}),
              ("seg", {"lo": 4, "hi": 100, "n_data": 49, "keys_est": 40})]
     assert eng._fold_ddl_barriers(list(items)) == items
-    items2 = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
-              ("ddl", {"event_id": 3, "query": "ALTER TABLE code.repos ADD COLUMN x INT"}),
-              ("seg", {"lo": 4, "hi": 100, "n_data": 49, "keys_est": 40})]
-    folded = eng._fold_ddl_barriers(items2)
-    assert [k for k, _ in folded] == ["ddl_deferred", "seg"]
-    assert folded[1][1]["lo"] == 2 and folded[1][1]["hi"] == 100 and folded[1][1]["n_data"] == 50
+    for query in ("ALTER TABLE code.repos ADD COLUMN x INT",
+                  "ALTER TABLE code.repos CHANGE COLUMN x y BIGINT"):
+        items2 = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
+                  ("ddl", {"event_id": 3, "query": query}),
+                  ("seg", {"lo": 4, "hi": 100, "n_data": 49, "keys_est": 40})]
+        folded = eng._fold_ddl_barriers(items2)
+        assert [k for k, _ in folded] == ["ddl_deferred", "seg"]
+        assert folded[1][1]["lo"] == 2 and folded[1][1]["hi"] == 100 and folded[1][1]["n_data"] == 50

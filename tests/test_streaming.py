@@ -30,8 +30,8 @@ def test_streaming_replay_and_checkpoint_wipe(spark, tmp_path):
     assert content_sha_map(actual) == content_sha_map(expected)
     # FULL frame equality, not just content shas: the unordered file stream
     # can apply post-DDL events before the DDL barrier — their DDL-added
-    # column values must survive via the residual extra map (regression:
-    # they used to be silently dropped, visible only off the sha'd columns).
+    # column values must survive in the rows' extra map (regression: they
+    # used to be silently dropped, visible only off the sha'd columns).
     assert expected.equals(actual[expected.columns.tolist()])
     n_applied = len(table.state["applied"])
 
@@ -51,11 +51,11 @@ def test_streaming_replay_and_checkpoint_wipe(spark, tmp_path):
     assert content_sha_map(table.to_pandas_sorted()) == content_sha_map(expected)
 
 
-def test_streaming_auto_compact_preserves_residual_extras(spark, tmp_path):
+def test_streaming_auto_compact_preserves_extras(spark, tmp_path):
     """Auto-compaction BETWEEN unordered micro-batches must not lose
-    residual extra-map values that are waiting for their DDL barrier: the
-    compaction rewrite happens while post-DDL values may only exist in the
-    residual map (the table's schema version lags the data)."""
+    extra-map values that are waiting for their DDL barrier: the
+    compaction rewrite happens while the table's schema version lags the
+    data, so those values are not yet columns of any read."""
     events = generate_events(spark, CFG)
     snap = generate_snapshot(spark, CFG)
     log = str(tmp_path / "log")

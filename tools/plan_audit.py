@@ -10,8 +10,9 @@ plan properties the 100 TB design depends on:
 3. the apply plan (``TargetTable._merge_plan``): exactly ONE payload
    exchange, sized to the touched buckets, single pass over the union (no
    shuffled join; SortAggregate is expected — see the in-code note), and
-   the table side read through a bucket partition filter;
-4. bucket-pruned read: partition filter on bucket= dirs (partition pruning,
+   the table side scanned from exactly the touched buckets' directories;
+4. bucket-pruned read: ONE scan whose root paths are exactly the requested
+   buckets' ``data/<snap>/bucket=NN`` directories (pruning by path list,
    not a data filter).
 
 Run: python tools/plan_audit.py   (writes PLANS.md; exits non-zero if an
@@ -50,6 +51,27 @@ WORK = "/dev/shm/bifrost_plan_audit" if os.path.isdir("/dev/shm") else os.path.j
 def n_nodes(plan: str, name: str) -> int:
     import re as _re
     return len(_re.findall(rf"^\(\d+\) {name}", plan, _re.M))
+
+
+def scan_roots(df, under: str) -> list[list[str]]:
+    """Root paths of each file scan under ``under`` in ``df``'s physical
+    plan (before AQE), one list per scan."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
+            continue
+        paths = leaf.relation().location().rootPaths()
+        roots = [re.sub(r"^file:", "", paths.apply(j).toString()) for j in range(paths.size())]
+        if all(r.startswith(under) for r in roots):
+            scans.append(roots)
+    return scans
+
+
+def bucket_dirs(table, buckets: list[int]) -> list[str]:
+    return sorted(os.path.join(table.path, "data", table.state["buckets"][str(b)], f"bucket={b}")
+                  for b in buckets)
 
 
 def formatted(df) -> str:
@@ -100,7 +122,9 @@ def main() -> int:
     # satisfies ClusteredDistribution(bucket, repo, path) and bucket is a
     # pure function of the PK (see TargetTable._merge_plan's single-exchange
     # note).
-    p = formatted(table._merge_plan(ops, [1, 2, 5], table.state["schema_version"]))
+    plan = table._merge_plan(ops, [1, 2, 5])
+    p = formatted(plan)
+    roots = scan_roots(plan, os.path.join(table.path, "data"))
     checks = [
         ("exactly ONE shuffle Exchange for merge AND write layout "
          "(the aggregate reuses the bucket exchange; the partitioned write "
@@ -109,8 +133,8 @@ def main() -> int:
          "hashpartitioning(bucket" in p),
         ("no shuffled join (union + aggregate, not full-outer SMJ)",
          n_nodes(p, "SortMergeJoin") == 0 and n_nodes(p, "ShuffledHashJoin") == 0),
-        ("the table side is read through a bucket partition filter",
-         "PartitionFilters" in p and "bucket" in p.split("PartitionFilters", 1)[1][:200]),
+        ("the table side is ONE scan of exactly the touched buckets' directories",
+         [sorted(r) for r in roots] == [bucket_dirs(table, [1, 2, 5])]),
     ]
     # NB: SortAggregate + per-partition Sort is EXPECTED here — Spark has no
     # hash exec for struct-buffer aggregates, and measured A/B showed the
@@ -120,14 +144,15 @@ def main() -> int:
     # whole payload exchange of the merged table deleted from the plan.
     sections.append(("Apply plan: touched buckets ∪ batch ops — one exchange end-to-end (incl. write)", p, checks))
 
-    # 4. bucket-pruned read: partition filter, not data filter
+    # 4. bucket-pruned read: the scan's path list is the pruning
     pruned = table.read(buckets=[1, 2])
     p = formatted(pruned)
+    roots = scan_roots(pruned, os.path.join(table.path, "data"))
     checks = [
-        ("bucket filter applied as PartitionFilters on the scan",
-         "PartitionFilters" in p and "bucket" in p.split("PartitionFilters", 1)[1][:200]),
+        ("the scan's root paths are exactly the requested buckets' directories",
+         [sorted(r) for r in roots] == [bucket_dirs(table, [1, 2])]),
     ]
-    sections.append(("Bucket-pruned table read — partition pruning", p, checks))
+    sections.append(("Bucket-pruned table read — pruning by path list", p, checks))
 
     # 5. SimHash pairs: fingerprints computed ONCE (cached, reused by the
     # band join and both verify sides), band shuffle keyed on (band, value)
