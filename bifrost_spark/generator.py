@@ -300,15 +300,20 @@ def write_event_log(df: DataFrame, path: str, n_chunks: int = 16, files_per_chun
 
 
 def write_chunk_index(spark: SparkSession, path: str) -> None:
-    """Write ``_chunks.json``: per-chunk (n_data, min/max event_id, DDL list).
+    """Write ``_chunks.json``: per chunk its data-event count ``n_data``,
+    event_id range ``lo``/``hi``, first/last GTID, distinct-key estimate
+    ``keys_est`` (the sum over its segments) and DDL list, plus
+    ``segments`` — the same stats per run of data events between DDLs, which
+    the position check (``pipelines/position.py``) reads.
 
     A real CDC source knows this without scanning payloads — a binlog dump
     carries positions on every envelope and DDLs arrive inline; Kafka batches
-    carry offset ranges.  The replay engine uses the index to skip its
-    per-batch pre-scan stats job (one driver round-trip + a column scan per
-    micro-batch — pure fixed overhead that extra cores cannot reduce).  The
-    index is derived here with ONE column-pruned scan of the written log at
-    setup time; batches without an index entry fall back to the scan path.
+    carry offset ranges.  The replay engine uses the chunk-level fields to
+    skip its per-batch pre-scan stats job (one driver round-trip + a column
+    scan per micro-batch — pure fixed overhead that extra cores cannot
+    reduce).  The index is derived here with ONE column-pruned scan of the
+    written log at setup time; batches without an index entry fall back to
+    the scan path.
     """
     import json
     import os
@@ -353,7 +358,7 @@ def write_chunk_index(spark: SparkSession, path: str) -> None:
         e = index.setdefault(
             f"chunk={r['chunk']}",
             {"n_data": 0, "lo": None, "hi": None, "gtid_first": None, "gtid_last": None,
-             "segments": [], "ddls": []},
+             "keys_est": 0, "segments": [], "ddls": []},
         )
         e["segments"].append({
             "n_data": r["n_data"], "lo": r["lo"], "hi": r["hi"],
@@ -361,6 +366,7 @@ def write_chunk_index(spark: SparkSession, path: str) -> None:
             "keys_est": r["keys_est"],
         })
         e["n_data"] += r["n_data"]
+        e["keys_est"] += r["keys_est"]
         e["lo"] = r["lo"] if e["lo"] is None else min(e["lo"], r["lo"])
         e["hi"] = r["hi"] if e["hi"] is None else max(e["hi"], r["hi"])
         e["gtid_first"] = e["gtid_first"] or r["gtid_first"]
@@ -369,7 +375,7 @@ def write_chunk_index(spark: SparkSession, path: str) -> None:
         index.setdefault(
             f"chunk={d['chunk']}",
             {"n_data": 0, "lo": None, "hi": None, "gtid_first": None, "gtid_last": None,
-             "segments": [], "ddls": []},
+             "keys_est": 0, "segments": [], "ddls": []},
         )["ddls"].append({"event_id": d["event_id"], "query": d["query"]})
     # scheme:// log roots (s3a/hdfs/...) go through the Hadoop FS like the
     # table metadata does; plain paths stay POSIX-atomic via os.replace

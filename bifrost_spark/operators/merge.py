@@ -47,7 +47,9 @@ protocol gives the same guarantees a MERGE INTO an Iceberg table would:
   lower-event_id upsert would resurrect a key whose higher-event_id delete
   had already been applied and physically dropped.  Tombstones are GC-able
   at compaction time once the source low-water mark passes their event_id
-  (same discipline as Iceberg positional-delete compaction).
+  (same discipline as Iceberg positional-delete compaction).  A TRUNCATE or
+  DROP TABLE is the whole-table tombstone: it empties the bucket map and
+  leaves a floor event_id (``cleared_at``) below which no op lands again.
 - **One physical row layout**: every data file holds ``repo, path, commit,
   lang, content, last_event_id, is_deleted, extra`` (``bucket`` is its
   directory).  DDL-added columns live only in the ``extra`` map, as the raw
@@ -499,11 +501,15 @@ class TargetTable:
 
     def _merge_plan(self, ops: DataFrame, touched: list[int], pre_lww: bool = False) -> DataFrame:
         """The apply plan, unexecuted: ``ops`` (all in the sorted ``touched``
-        buckets) merged with those buckets' rows into the rows to write.
-        ``tools/plan_audit.py`` explains this frame."""
+        buckets) above the table's clear floor (``apply_ddl``) merged with
+        those buckets' rows into the rows to write.  ``tools/plan_audit.py``
+        explains this frame."""
         from bifrost_spark.operators import lww
 
         payload = ["op", "commit", "lang", "content", "extra", "event_id"]
+        # the clear floor: a TRUNCATE / DROP TABLE at ``cleared_at`` dropped
+        # every op older than itself, whichever batch carries it
+        ops = ops.filter(F.col("event_id") > F.lit(self.state.get("cleared_at", -1)))
         if pre_lww:
             # Hot-key mitigation: the single exchange below moves RAW batch
             # ops to their bucket's reducer, so a dup-heavy batch would pile
@@ -725,8 +731,13 @@ class TargetTable:
         """Schema evolution — metadata-only commit (Iceberg-style).
 
         ADD/MODIFY/CHANGE/DROP COLUMN bump the registry; data files are not
-        rewritten (reads align).  TRUNCATE clears the bucket map.  Mirrors
-        the reference's ALTER transfer + cache invalidation
+        rewritten (reads align).  TRUNCATE and DROP TABLE clear the bucket
+        map and record ``event_id`` as the clear floor ``cleared_at``: a
+        range tombstone over the whole table, below which ``_merge_plan``
+        lets no op land again — not the rest of the batch that carried the
+        DDL, not a late event of unordered delivery.  This is the one place
+        that decides which DDLs clear the table.  Mirrors the reference's
+        ALTER transfer + cache invalidation
         (/root/reference/plugin/clickhouse/src/alter_sql.go:59-330,
         /root/reference/Bristol/mysql/conn_dump.go:196-203).
         """
@@ -744,12 +755,13 @@ class TargetTable:
             # TRUNCATE empties the table; DROP TABLE additionally evicted the
             # cached schema (registry.apply_ddl) — both clear the bucket map
             st["buckets"] = {}
+            st["cleared_at"] = max(st.get("cleared_at", -1), event_id)
         if not defer_lwm:
-            # defer_lwm=True: a DDL-barrier FOLD (ReplayEngine) is about to
-            # merge the small pre-DDL remainder segment together with the
-            # post-DDL segment; advancing the high-water mark past the DDL id
-            # here would mark those still-unapplied pre-DDL events stale on a
-            # crash-resume.  The folded merge's own commit advances it.
+            # defer_lwm=True: the DDL commits ahead of its batch's one merge
+            # (ReplayEngine.apply_batch), which still holds data events
+            # older than it; advancing the high-water mark past the DDL id
+            # here would mark those unapplied events stale on a
+            # crash-resume.  The merge's own commit advances it.
             st["last_event_id"] = max(st["last_event_id"], event_id)
         self._commit(st, {"batch_id": batch_id, "min_event_id": event_id,
                           "max_event_id": event_id, "kind": "ddl", "query": query, "n_ops": 0})

@@ -35,7 +35,8 @@ def sequential_apply(events: pd.DataFrame, snapshot: pd.DataFrame | None = None)
         et = r["event_type"]
         if et == "ddl":
             v = registry.apply_ddl(r["query"])
-            if v.truncated:
+            if v.truncated or v.dropped:
+                # MySQL semantics: a dropped table's rows are gone too
                 state.clear()
             continue
         if et not in ("insert", "update", "delete"):

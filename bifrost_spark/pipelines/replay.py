@@ -1,17 +1,19 @@
-"""Replay engine: ordered change-event batches → LWW → MERGE, DDL barriers.
+"""Replay engine: ordered change-event batches → LWW → MERGE, one merge per batch.
 
 This is the Spark-side equivalent of the reference's consume loop
 (/root/reference/server/to_server_consume.go:50-484): a micro-batch replaces
 the bounded queue + 500-event sink transaction
-(/root/reference/plugin/mysql/src/mysql.go:482-668), and the DDL-as-barrier
-rule replaces its synthetic BEGIN/COMMIT around DDL
-(/root/reference/Bristol/mysql/conn_dump.go:242-277) where it still matters:
-rows carry DDL-added values by name in their ``extra`` map, so only a DDL
-that clears the table (TRUNCATE, DROP TABLE) splits a batch's merge
-(SURVEY.md §7 "DDL barrier").
+(/root/reference/plugin/mysql/src/mysql.go:482-668), and each micro-batch is
+ONE atomic, idempotent sink commit — the unit Structured Streaming builds
+exactly-once on.  The reference wraps every DDL in a synthetic BEGIN/COMMIT
+(/root/reference/Bristol/mysql/conn_dump.go:242-277); here no DDL splits a
+batch: rows carry DDL-added values by name in their ``extra`` map, so schema
+changes commute with the merge, and a TRUNCATE or DROP TABLE records a clear
+floor in the table (``TargetTable.apply_ddl``) below which the merge drops
+every op (SURVEY.md §7 "DDL barrier").
 
 ``apply_batch`` takes ANY set of events (a chunk, a streaming micro-batch,
-an overlapping replay) and is idempotent: segment batch_ids derive from the
+an overlapping replay) and is idempotent: merge batch_ids derive from the
 actual event_id range, and the TargetTable manifest skips applied ranges.
 DDL events are collected driver-side — there are only ever a handful per
 stream — while all row data stays distributed.
@@ -27,7 +29,6 @@ from pyspark.sql import functions as F
 
 from bifrost_spark.operators.lww import events_to_ops, lww_key_expr
 from bifrost_spark.operators.merge import TargetTable, bucket_expr
-from bifrost_spark.registry import SchemaRegistry
 from bifrost_spark.schemas import EVENT_SCHEMA
 
 
@@ -57,10 +58,10 @@ def _touched(row) -> list[int]:
 
 
 def prescan_agg(events: DataFrame, n_buckets: int, live=None) -> DataFrame:
-    """The one stats aggregation a hint-less batch (or DDL-split segment)
-    runs before its merge, uncollected: over the ``live`` events, their
-    count, event_id range, distinct-key estimate and touched buckets
-    (``_touched_aggs``), plus the batch's DDL events in event_id order.
+    """The one stats aggregation a hint-less batch runs before its merge,
+    uncollected: over the ``live`` events, their count, event_id range,
+    distinct-key estimate and touched buckets (``_touched_aggs``), plus the
+    batch's DDL events in event_id order.
     Column pruning keeps its scan to event_id, event_type, query and the
     images' PK fields."""
     live = F.lit(True) if live is None else live
@@ -138,31 +139,31 @@ class ReplayEngine:
         return res
 
     def apply_batch(self, events: DataFrame, hints: dict | None = None) -> list[dict]:
-        """Apply one micro-batch: its data segments and DDLs, in event_id
-        order, with every DDL that leaves the table's rows alone folded out
-        of the way (``_fold_ddl_barriers``) — per segment resolve-LWW +
-        MERGE, DDLs as metadata-only commits.
+        """Apply one micro-batch as ONE merge: the DDLs below its last live
+        data event commit first (metadata-only, high-water mark deferred —
+        see ``TargetTable.apply_ddl``), then one resolve-LWW + MERGE of every
+        live data event, then the DDLs after it.  No DDL splits the merge:
+        rows carry DDL-added values by name, so a schema change commutes
+        with it, and a TRUNCATE or DROP TABLE leaves a clear floor in the
+        table that drops the batch's older ops inside the merge itself.
 
-        Driver-job economy (this matters for scaling efficiency — each
-        driver-synchronized Spark job carries fixed scheduling latency that
-        extra cores cannot reduce): with source-supplied ``hints``
-        (``{"segments", "ddls"}`` — a binlog source knows its position
-        ranges and sees DDLs inline; ``write_event_log`` persists them as
-        ``_chunks.json``), the batch runs ZERO pre-scan jobs — only the
-        merges.  Without hints, ONE column-pruned aggregation job yields the
-        DDL list and, for the whole batch, the live-event count, event_id
-        range (stale-skip high-water mark applied), distinct-key estimate
-        and touched buckets; only segments a table-clearing DDL keeps apart
-        scan again.  Hints are trusted only when the whole batch is ahead of
-        the committed high-water mark; a partially-replayed batch (crash
-        resume) falls back to the scan.
+        The merge needs the batch's live-event count, event_id range,
+        distinct-key estimate, touched buckets and DDL list.  With
+        source-supplied ``hints`` — a chunk's ``n_data``, ``lo``, ``hi``,
+        ``gtid_first``, ``gtid_last``, ``keys_est`` and ``ddls`` (a binlog
+        source knows its position ranges and sees DDLs inline;
+        ``write_event_log`` persists them as ``_chunks.json``) — only the
+        touched buckets cost a job, a key-only one.  Without hints, ONE
+        column-pruned aggregation (``prescan_agg``) yields them all (driver
+        jobs carry fixed scheduling latency that extra cores cannot
+        reduce).  Hints are trusted only when the batch holds no data or all
+        of it is above the committed high-water mark; a partially-replayed
+        batch (crash resume) falls back to the scan.
         """
         lwm = self.table.last_event_id if self.ordered else -1
         is_data = F.col("event_type").isin("insert", "update", "delete")
         live = is_data & (F.col("event_id") > F.lit(lwm))
-        indexed = (hints is not None and hints.get("segments") is not None
-                   and all(s["lo"] > lwm for s in hints["segments"]))
-        stats = None
+        indexed = hints is not None and (hints["lo"] is None or hints["lo"] > lwm)
         if not indexed:
             # Scan path (the streaming file stream, an external caller): the
             # batch is consumed at least twice (this stats agg, then the
@@ -173,107 +174,41 @@ class ReplayEngine:
             events = events.persist()
         try:
             if indexed:
-                segs, ddls = hints["segments"], hints.get("ddls", [])
+                n, lo, hi, keys_est = hints["n_data"], hints["lo"], hints["hi"], hints.get("keys_est")
+                ddls, touched, stats_ms = hints.get("ddls", []), None, 0.0
+                gtid_set = _gtid_range(hints.get("gtid_first"), hints.get("gtid_last"))
             else:
                 t0 = time.time()
-                stats = prescan_agg(events, self.table.n_buckets, live).collect()[0]
+                r = prescan_agg(events, self.table.n_buckets, live).collect()[0]
                 stats_ms = (time.time() - t0) * 1000
-                ddls = list(stats["ddls"])
-                # the segments between the DDLs, as event_id bounds; one that
-                # misses the live events' [lo, hi] holds none of them
-                cuts = [d["event_id"] for d in ddls]
-                segs = [{"lo": lo + 1, "hi": None if hi is None else hi - 1, "n_data": None}
-                        for lo, hi in zip([-1, *cuts], [*cuts, None])
-                        if stats["n"] and lo < stats["hi"] and (hi is None or hi > stats["lo"])]
-            items = sorted([("seg", s) for s in segs] + [("ddl", d) for d in ddls],
-                           key=lambda t: t[1]["lo"] if t[0] == "seg" else t[1]["event_id"])
-            items = self._fold_ddl_barriers(items)
-            seg_items = [item for kind, item in items if kind == "seg"]
-            if stats is not None and len(seg_items) == 1:
-                # no DDL keeps segments apart: the one segment is the whole
-                # batch, which the pre-scan already measured
-                seg_items[0].update(n_data=stats["n"], lo=stats["lo"], hi=stats["hi"],
-                                    keys_est=stats["keys_est"], touched=_touched(stats),
-                                    stats_ms=stats_ms)
-            results: list[dict] = []
-            for kind, item in items:
-                if kind != "seg":
-                    results.append(self.table.apply_ddl(
-                        item["query"], batch_id=f"ddl:{item['event_id']}",
-                        event_id=item["event_id"], range_exclusive=self.ordered,
-                        defer_lwm=(kind == "ddl_deferred"),
-                    ))
-                    continue
-                seg_df = events.filter(live & (F.col("event_id") >= item["lo"]))
-                if item["hi"] is not None:
-                    seg_df = seg_df.filter(F.col("event_id") <= item["hi"])
-                results.extend(self._merge_segment(
-                    seg_df, n=item["n_data"], lo=item["lo"], hi=item["hi"],
-                    stats_ms=item.get("stats_ms", 0.0),
-                    gtid_set=_gtid_range(item.get("gtid_first"), item.get("gtid_last")),
-                    keys_est=item.get("keys_est"), touched=item.get("touched"),
-                ))
+                n, lo, hi, keys_est = r["n"], r["lo"], r["hi"], r["keys_est"]
+                ddls, touched, gtid_set = r["ddls"], _touched(r), None
+
+            def ddl(d, defer_lwm: bool) -> dict:
+                return self.table.apply_ddl(
+                    d["query"], batch_id=f"ddl:{d['event_id']}", event_id=d["event_id"],
+                    range_exclusive=self.ordered, defer_lwm=defer_lwm)
+
+            ddls = sorted(ddls, key=lambda d: d["event_id"])
+            early = [d for d in ddls if hi is not None and d["event_id"] < hi]
+            results = [ddl(d, True) for d in early]
+            results.extend(self._merge(events.filter(live), n, lo, hi, keys_est, touched,
+                                       gtid_set=gtid_set, stats_ms=stats_ms))
+            results.extend(ddl(d, False) for d in ddls[len(early):])
             return results
         finally:
             if not indexed:
                 events.unpersist()
 
-    def _fold_ddl_barriers(self, items: list[tuple[str, dict]]) -> list[tuple[str, dict]]:
-        """Collapse every [segment, DDL, segment] run into [deferred DDL,
-        one merged segment], unless the DDL clears the table's rows.
-
-        A chunk boundary rarely coincides with a DDL, so a DDL mid-chunk
-        leaves a remainder segment on its left — often a handful of events
-        (the bench shape: ONE event) — that would otherwise pay a full merge
-        commit cycle (~0.3-0.6 s of fixed driver/job cost at local[32]) for
-        almost no data.  The merge never depends on the schema version —
-        rows keep their DDL-added values in the raw ``extra`` map and reads
-        type them at the current version — so a DDL commutes with the ops
-        around it: apply it first (metadata-only, with the high-water mark
-        DEFERRED so a crash-resume cannot mark the pre-DDL events stale —
-        see TargetTable.apply_ddl), then merge both segments as one.  Only
-        TRUNCATE and DROP TABLE, which clear the bucket map, keep the strict
-        barrier: the ops before them must land first and be cleared."""
-
-        def clears_table(query: str) -> bool:
-            v = SchemaRegistry().apply_ddl(query)
-            return v.truncated or v.dropped
-
-        def plus(a: dict, b: dict, k: str):
-            return a[k] + b[k] if a.get(k) is not None and b.get(k) is not None else None
-
-        out = list(items)
-        i = 0
-        while i + 2 < len(out):
-            (a_kind, a), (d_kind, d), (b_kind, b) = out[i : i + 3]
-            if (a_kind, d_kind, b_kind) == ("seg", "ddl", "seg") and not clears_table(d["query"]):
-                merged = {
-                    "lo": a["lo"], "hi": b["hi"],
-                    "n_data": plus(a, b, "n_data"),
-                    "keys_est": plus(a, b, "keys_est"),
-                    "gtid_first": a.get("gtid_first"),
-                    "gtid_last": b.get("gtid_last"),
-                }
-                # the merged segment may precede another foldable DDL
-                out[i : i + 3] = [("ddl_deferred", d), ("seg", merged)]
-            i += 1
-        return out
-
-    def _merge_segment(self, seg: DataFrame, n: int | None = None,
-                       lo: int | None = None, hi: int | None = None,
-                       stats_ms: float = 0.0, gtid_set: str | None = None,
-                       keys_est: int | None = None, touched: list[int] | None = None) -> list[dict]:
-        # F9 stale-event skip (reference: channel_consume.go:300-314): a
-        # redelivered batch — even one sliced differently than the original
-        # (checkpoint wipe, changed trigger size) — contributes nothing below
-        # the committed high-water mark, so replays are true no-ops rather
-        # than guard-protected rewrites.  Only valid under ordered delivery;
-        # apply_batch bakes the filter into ``live`` for the fast path.
-        if n is None:
-            if self.ordered:
-                seg = seg.filter(F.col("event_id") > F.lit(self.table.last_event_id))
-            r = prescan_agg(seg, self.table.n_buckets).collect()[0]
-            n, lo, hi, keys_est, touched = r["n"], r["lo"], r["hi"], r["keys_est"], _touched(r)
+    def _merge(self, events: DataFrame, n: int, lo: int | None, hi: int | None,
+               keys_est: int | None, touched: list[int] | None,
+               gtid_set: str | None = None, stats_ms: float = 0.0) -> list[dict]:
+        # ``events`` are the batch's live data events: under ordered
+        # delivery ``live`` holds the F9 stale-event skip (reference:
+        # channel_consume.go:300-314) — a redelivered batch, even one sliced
+        # differently than the original (checkpoint wipe, changed trigger
+        # size), contributes nothing below the committed high-water mark, so
+        # replays are true no-ops rather than guard-protected rewrites.
         if n == 0:
             return []
         batch_id = f"merge:{lo}-{hi}"
@@ -282,12 +217,12 @@ class ReplayEngine:
         if touched is None:
             # indexed batches skip the pre-scan: one key-only job reads just
             # the image PKs (nested-column pruning) to name the buckets
-            touched = _touched(seg.agg(*_touched_aggs(self.table.n_buckets)).collect()[0])
+            touched = _touched(events.agg(*_touched_aggs(self.table.n_buckets)).collect()[0])
         last_err: Exception | None = None
         for attempt in range(self.max_retries + 1):
             try:
                 res = self.table.apply_ops(
-                    events_to_ops(seg), batch_id=batch_id, batch_range=(lo, hi),
+                    events_to_ops(events), batch_id=batch_id, batch_range=(lo, hi),
                     n_ops_hint=n, n_keys_hint=keys_est,
                     range_exclusive=self.ordered, gtid_set=gtid_set, touched=touched,
                 )
@@ -299,7 +234,7 @@ class ReplayEngine:
                 last_err = e
         if self.on_error != "dead_letter":
             raise last_err
-        return [self.table.quarantine(seg, batch_id, (lo, hi), error=repr(last_err))]
+        return [self.table.quarantine(events, batch_id, (lo, hi), error=repr(last_err))]
 
 
 def gtid_resume_chunk(log_path: str, table: TargetTable) -> int:

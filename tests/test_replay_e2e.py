@@ -96,8 +96,9 @@ def test_oracle_self_check(fixtures):
 
 def test_chunk_index_fast_path_engages(spark, tmp_path):
     """Guard against the round-2 partition-type-inference bug: when the log
-    carries _chunks.json, ordered replay must take the zero-pre-scan hint
-    path for EVERY chunk (no stats_ms in any result), and index keys must
+    carries _chunks.json, ordered replay must take the hint path for EVERY
+    chunk — no pre-scan stats job (no stats_ms in any result), only the
+    key-only job that names the touched buckets — and index keys must
     match the chunk directory names exactly."""
     import json
     import os
@@ -123,22 +124,20 @@ def test_chunk_index_fast_path_engages(spark, tmp_path):
 
 
 def test_ddl_barrier_fold(spark, tmp_path):
-    """A pre-DDL remainder segment folds into the next segment across any
-    DDL that leaves the table's rows alone — one merge cycle per chunk —
-    with the high-water mark deferred so a crash between the folded DDL
-    commit and the merged segment commit cannot mark the pre-DDL events
-    stale.  State must equal the sequential oracle, and a table-clearing
-    DDL (TRUNCATE) must keep the strict barrier."""
+    """A DDL mid-chunk costs one metadata-only commit and no merge of its
+    own — one merge cycle per chunk — with the high-water mark deferred so
+    a crash between the DDL commit and the chunk's merge commit cannot mark
+    the pre-DDL events stale.  State must equal the sequential oracle."""
     from bifrost_spark.generator import GeneratorConfig, generate_events, write_event_log
     from bifrost_spark.oracle import content_sha_map, sequential_apply
-    from bifrost_spark.pipelines.replay import ReplayEngine, replay_event_log
+    from bifrost_spark.pipelines.replay import replay_event_log
 
     cfg = GeneratorConfig(n_events=4000, n_keys=400, n_repos=10, seed=11, snapshot_keys=0,
                           ddl=[(2000, "ALTER TABLE code.repos ADD COLUMN stars INT")])
     events = generate_events(spark, cfg)
     log = str(tmp_path / "log")
     # 4 chunks of 1000 data events: the DDL (idx 2000) lands right after the
-    # first event of chunk 2 → a 1-op pre-DDL remainder, the fold shape
+    # first event of chunk 2 → a 1-op pre-DDL remainder
     write_event_log(events, log, n_chunks=4)
     expected = sequential_apply(events.toPandas())
 
@@ -148,27 +147,11 @@ def test_ddl_barrier_fold(spark, tmp_path):
     merged = [a for a in t.state["applied"] if a["kind"].startswith("merge")]
     assert len(merged) == 4  # one merge cycle per chunk: the DDL split none
 
-    # deferred-lwm crash safety: apply only the folded DDL, then reopen —
-    # the pre-DDL events must still be above the high-water mark
+    # deferred-lwm crash safety: apply only the DDL, then reopen — the
+    # pre-DDL events must still be above the high-water mark
     t2 = TargetTable.create(spark, str(tmp_path / "tbl_crash"), n_buckets=4)
     before = t2.last_event_id
     t2.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT",
                  batch_id="ddl:4003", event_id=4003, defer_lwm=True)
     assert t2.last_event_id == before  # not advanced past unapplied data
     assert t2.state["schema_version"] == 1  # but the schema DID evolve
-
-    # TRUNCATE never folds: it empties the table, so pre-DDL ops must apply
-    # first — assert the fold pass leaves the item order intact
-    eng = ReplayEngine(t2, ordered=True)
-    items = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
-             ("ddl", {"event_id": 3, "query": "TRUNCATE TABLE code.repos"}),
-             ("seg", {"lo": 4, "hi": 100, "n_data": 49, "keys_est": 40})]
-    assert eng._fold_ddl_barriers(list(items)) == items
-    for query in ("ALTER TABLE code.repos ADD COLUMN x INT",
-                  "ALTER TABLE code.repos CHANGE COLUMN x y BIGINT"):
-        items2 = [("seg", {"lo": 2, "hi": 2, "n_data": 1, "keys_est": 1}),
-                  ("ddl", {"event_id": 3, "query": query}),
-                  ("seg", {"lo": 4, "hi": 100, "n_data": 49, "keys_est": 40})]
-        folded = eng._fold_ddl_barriers(items2)
-        assert [k for k, _ in folded] == ["ddl_deferred", "seg"]
-        assert folded[1][1]["lo"] == 2 and folded[1][1]["hi"] == 100 and folded[1][1]["n_data"] == 50

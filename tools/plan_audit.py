@@ -9,8 +9,10 @@ plan properties the 100 TB design depends on:
    scalable hot-key answer) and ONE exchange;
 3. the apply plan (``TargetTable._merge_plan``): exactly ONE payload
    exchange, sized to the touched buckets, single pass over the union (no
-   shuffled join; SortAggregate is expected — see the in-code note), and
-   the table side scanned from exactly the touched buckets' directories;
+   shuffled join; SortAggregate is expected — see the in-code note), the
+   batch ops filtered to the table's clear floor (``cleared_at``) below the
+   exchange, and the table side scanned from exactly the touched buckets'
+   directories;
 4. bucket-pruned read: ONE scan whose root paths are exactly the requested
    buckets' ``data/<snap>/bucket=NN`` directories (pruning by path list,
    not a data filter).
@@ -135,6 +137,10 @@ def main() -> int:
          n_nodes(p, "SortMergeJoin") == 0 and n_nodes(p, "ShuffledHashJoin") == 0),
         ("the table side is ONE scan of exactly the touched buckets' directories",
          [sorted(r) for r in roots] == [bucket_dirs(table, [1, 2, 5])]),
+        ("the batch ops are filtered to the clear floor (event_id > cleared_at) "
+         "below the exchange", bool(re.search(
+             rf"^Condition : .*\(event_id#\d+L > {table.state.get('cleared_at', -1)}\)",
+             re.split(r"^\(\d+\) Exchange", p, flags=re.M)[0], re.M))),
     ]
     # NB: SortAggregate + per-partition Sort is EXPECTED here — Spark has no
     # hash exec for struct-buffer aggregates, and measured A/B showed the
