@@ -25,7 +25,7 @@ Subcommands:
   stream     Structured Streaming replay (checkpointed, availableNow or live)
   compact    rewrite live buckets, GC tombstones below a low-water mark
   vacuum     drop orphan snapshot dirs + superseded state files
-  status     print table state (snapshot, buckets, applied batches, schema)
+  status     print table state (snapshot, buckets, commit count, schema version)
              and the last STATUS_RECORDS per-batch records with their events/s
 """
 
@@ -212,9 +212,9 @@ def main(argv: list[str] | None = None) -> int:
             "snapshot": table.state["snapshot"],
             "n_buckets": table.n_buckets,
             "live_buckets": len(table.state["buckets"]),
-            "applied_batches": len(table.state["applied"]),
+            "applied_batches": int(table.state["snapshot"][1:]),  # one per commit
             "last_event_id": table.last_event_id,
-            "schema_version": table.state["schema_version"],
+            "schema_version": table.registry.current_version,
             "rows": table.read().count(),
             "recent": [{"kind": r.get("kind"), "batch_id": r.get("batch_id"),
                         "event_range": [r.get("min_event_id"), r.get("max_event_id")],

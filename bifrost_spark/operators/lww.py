@@ -87,10 +87,9 @@ def events_to_ops(events: DataFrame) -> DataFrame:
         events.where("event_type IN ('insert', 'update', 'delete')")
         .selectExpr(
             "event_id",
-            "schema_version",
             f"explode(filter(array({del_struct}, {ups_struct}), x -> x IS NOT NULL)) AS o",
         )
-        .selectExpr("event_id", "schema_version", "o.*")
+        .selectExpr("event_id", "o.*")
     )
 
 
@@ -100,7 +99,7 @@ def resolve_lww(ops: DataFrame, keys: list[str] | None = None,
 
     ``keys`` are the grouping columns (default the PK) and ``payload`` the
     columns carried from the winning op (default op, ``OP_PAYLOAD``,
-    event_id, schema_version); the result is keys + payload + ``seq``.
+    event_id); the result is keys + payload + ``seq``.
     ``TargetTable.apply_ops`` runs its one merge aggregate through here with
     keys ``(bucket, *PK)`` and the row payload, the raw ``extra`` map among it.
 
@@ -113,7 +112,7 @@ def resolve_lww(ops: DataFrame, keys: list[str] | None = None,
     ``(key, seq)`` unique.
     """
     keys = list(PK_COLUMNS) if keys is None else list(keys)
-    payload = ["op", *OP_PAYLOAD, "event_id", "schema_version"] if payload is None else list(payload)
+    payload = ["op", *OP_PAYLOAD, "event_id"] if payload is None else list(payload)
     val = F.struct(*payload)
     out = ops.groupBy(*keys).agg(F.max_by(val, F.col("seq")).alias("v"), F.max("seq").alias("seq"))
     return out.select(*keys, "v.*", "seq")

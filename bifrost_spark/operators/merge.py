@@ -23,15 +23,14 @@ protocol gives the same guarantees a MERGE INTO an Iceberg table would:
   last rewrote it.  Readers see the old state until the pointer moves;
   a crash mid-commit leaves only orphan files (GC-able), never a torn table.
 - **Idempotent commit manifests** (exactly-once, SURVEY.md §4 custom-work 2):
-  the manifest records applied batches two ways — a bounded tail of recent
-  entries (observability) and ``applied_ranges``, a MERGED interval set of
-  committed event_id ranges.  The replay check is range containment, so the
-  state JSON stays **O(1)** over a 10^6-batch stream (ordered delivery makes
-  the ranges contiguous → they collapse to one interval), instead of growing
-  O(batches) and being rewritten every commit.  Each commit's entry is also
-  appended to ``_state/lineage.jsonl``, the table's one per-batch record
-  (``lineage()``), unbounded because the append never rewrites the state.
-  Every apply first checks the applied set and no-ops on replay — the Spark
+  the manifest records applied batches as ``applied_ids``, a bounded tail
+  of batch ids, and ``applied_ranges``, a MERGED interval set of committed
+  event_id ranges, so the state JSON stays **O(1)** over a 10^6-batch
+  stream (ordered delivery makes the ranges contiguous → one interval).
+  Each commit's full entry lives only in ``_state/lineage.jsonl``, the
+  table's one per-batch record (``lineage()``), unbounded because the
+  append never rewrites the state.  Every apply first checks the applied
+  set and no-ops on replay — the Spark
   rebuild of the reference's LastSuccessBinlog-only-on-commit discipline
   (/root/reference/server/to_server_consume.go:133-160,
   /root/reference/server/storage.go:52-128), strengthened from
@@ -56,8 +55,9 @@ protocol gives the same guarantees a MERGE INTO an Iceberg table would:
   strings their events carried — the reference's by-name row image
   (/root/reference/plugin/driver/driver.go:29-45).  Schema evolution is
   therefore metadata-only and the write path never sees a schema version:
-  the registry rides in the manifest and ``read`` types the map's values
-  at the current version (``SchemaRegistry.align``), like Iceberg schema ids.
+  the registry rides in the manifest, the one holder of the current
+  version, and ``read`` types the map's values at that version
+  (``SchemaRegistry.align``), like Iceberg schema ids.
 
 Reference semantics being reproduced: MySQL-sink REPLACE/ON-DUP-KEY/DELETE
 batch apply (/root/reference/plugin/mysql/src/mysql_normal_sync.go:16-146)
@@ -90,7 +90,7 @@ FILE_SCHEMA = T.StructType([*[T.StructField(f.name, f.dataType) for f in TARGET_
                             T.StructField("extra", EXTRA_TYPE)])
 ROW_COLS = [*FILE_SCHEMA.fieldNames(), "bucket"]
 
-# Commit entries kept in the manifest's recent tail, and the cap on its
+# Batch ids kept in the manifest's recent tail, and the cap on its
 # merged event_id interval set (smallest-gap compaction past it).
 APPLIED_TAIL = 256
 APPLIED_INTERVALS = 64
@@ -155,10 +155,10 @@ class TargetTable:
 
     def snapshots(self) -> list[dict]:
         """Commit history: one entry per retained snapshot manifest, oldest
-        first — (snapshot, last_event_id, n_commits, data_present).  Data
-        presence goes false once ``vacuum()`` retires a snapshot's files;
-        such snapshots are still listed (the manifest documents history)
-        but no longer time-travel-readable."""
+        first — (snapshot, last_event_id, n_commits: the snapshot number,
+        data_present).  Data presence goes false once ``vacuum()`` retires a
+        snapshot's files; such snapshots are still listed but no longer
+        time-travel-readable."""
         state_dir = os.path.join(self.path, "_state")
         out = []
         for name in sorted(self._fs.listdir(state_dir)):
@@ -171,7 +171,7 @@ class TargetTable:
                 self._fs.exists(os.path.join(self.path, "data", s)) for s in data_dirs
             )
             out.append({"snapshot": snap, "last_event_id": st.get("last_event_id"),
-                        "n_commits": st.get("n_commits", 0), "data_present": present})
+                        "n_commits": int(snap[1:]), "data_present": present})
         return out
 
     # ------------------------------------------------------------------ state
@@ -185,11 +185,9 @@ class TargetTable:
             "snapshot": "v00000000",
             "n_buckets": n_buckets,
             "registry": (registry or SchemaRegistry()).to_dict(),
-            "schema_version": (registry or SchemaRegistry()).current_version,
             "buckets": {},
-            "applied": [],          # bounded tail of recent commit entries
+            "applied_ids": [],      # bounded tail of recent batch ids
             "applied_ranges": [],   # merged [lo, hi] event_id intervals (O(1) steady-state)
-            "n_commits": 0,
             "last_event_id": -1,
         }
         cls._write_snapshot(fs, path, state)
@@ -222,6 +220,9 @@ class TargetTable:
                 f"{self.path}: snapshot {state['snapshot']} was written with typed "
                 "DDL-added columns (its manifest carries a 'schemas' map); this "
                 "version keeps them in the extra map only and cannot read that table")
+        if "applied" in state:  # a manifest that kept full entries: keep the ids
+            state["applied_ids"] = [a["batch_id"] for a in state.pop("applied")]
+            state = {k: v for k, v in state.items() if k not in ("schema_version", "n_commits")}
         self.state = state
         self.registry = SchemaRegistry.from_dict(state["registry"])
 
@@ -231,9 +232,9 @@ class TargetTable:
 
     @property
     def applied_batch_ids(self) -> set[str]:
-        """Batch ids in the bounded recent tail (observability/back-compat;
-        the durable replay check is ``is_applied`` range containment)."""
-        return {a["batch_id"] for a in self.state["applied"]}
+        """Batch ids of the last ``APPLIED_TAIL`` commits (the durable
+        replay check is ``is_applied`` range containment)."""
+        return set(self.state["applied_ids"])
 
     def is_applied(self, batch_id: str, batch_range: tuple[int, int] | None = None,
                    range_exclusive: bool = False) -> bool:
@@ -265,12 +266,12 @@ class TargetTable:
         """The one commit sequence.  ``st`` is the caller's edited copy of
         ``self.state`` and becomes the next snapshot: ``entry`` (completed
         to the ``RECORD_KEYS`` shape and stamped with ``snapshot`` and
-        ``committed_at`` in place) joins the applied record — the bounded
-        tail and the merged interval set — a fresh ``_state/<snap>.json`` is
-        written, the atomic CURRENT swing publishes it, this handle takes
-        the manifest it wrote (JSON round trip, no re-read), and the entry
-        is appended to ``_state/lineage.jsonl``.  A manifest that CURRENT
-        has named is never rewritten.
+        ``committed_at`` in place) joins the applied record by its batch id
+        and range, a fresh ``_state/<snap>.json`` is written, the atomic
+        CURRENT swing publishes it, this handle takes the manifest it wrote
+        (JSON round trip, no re-read), and the entry is appended to its only
+        copy, ``_state/lineage.jsonl``.  A manifest CURRENT has named is
+        never rewritten.
 
         The append follows the swing, so every line names a committed
         snapshot and a failed commit leaves none; a crash between the two
@@ -280,8 +281,7 @@ class TargetTable:
             entry.setdefault(k, None)
         st["snapshot"] = entry["snapshot"] = self._next_snapshot()
         entry["committed_at"] = time.time()
-        st["applied"] = (st["applied"] + [entry])[-APPLIED_TAIL:]
-        st["n_commits"] = st.get("n_commits", 0) + 1
+        st["applied_ids"] = (st["applied_ids"] + [entry["batch_id"]])[-APPLIED_TAIL:]
         if entry["min_event_id"] is not None and entry["max_event_id"] is not None:
             st["applied_ranges"] = _merge_ranges(
                 st.get("applied_ranges", []) + [[entry["min_event_id"], entry["max_event_id"]]],
@@ -296,8 +296,8 @@ class TargetTable:
 
     def lineage(self) -> list[dict]:
         """The per-batch record: one entry per commit up to this handle's
-        snapshot, in commit order, each equal to that commit's entry in the
-        manifest's ``applied`` tail — which keeps only the recent ones."""
+        snapshot, in commit order — the only copy of each commit's full
+        entry (the manifest keeps just the recent batch ids)."""
         recs = [json.loads(line) for line in self._fs.read_lines(self._lineage_path())
                 if line.strip()]
         # lines from tables written before commits appended their entries
@@ -358,7 +358,7 @@ class TargetTable:
                 *[os.path.join(self.path, "data", bmap[b], f"bucket={b}") for b in want]
             ).withColumn("bucket", bucket_expr(self.n_buckets))
         cols = [*BASE_COLS, "is_deleted", "bucket", *(["extra"] if include_deleted else [])]
-        aligned = self.registry.align(out, self.state["schema_version"], base_cols=cols)
+        aligned = self.registry.align(out, base_cols=cols)
         if not include_deleted:
             aligned = aligned.filter(~F.col("is_deleted")).drop("is_deleted")
         return aligned
@@ -516,7 +516,7 @@ class TargetTable:
             # one key's ops onto one task.  Pre-resolving costs one extra PK
             # exchange of the BATCH ONLY (the map-side partial max_by
             # collapses a hot key to ≤1 row per map task before it moves).
-            ops = lww.resolve_lww(ops)
+            ops = lww.resolve_lww(ops, payload=payload)
 
         # Rank = 2*seq + is_table_row: at equal seq the table row wins (the
         # strict-newer MERGE guard), and max_by never sees a tie.
@@ -750,7 +750,6 @@ class TargetTable:
         new_v = registry.apply_ddl(query)
         st = dict(self.state)
         st["registry"] = registry.to_dict()
-        st["schema_version"] = new_v.version
         if new_v.truncated or new_v.dropped:
             # TRUNCATE empties the table; DROP TABLE additionally evicted the
             # cached schema (registry.apply_ddl) — both clear the bucket map

@@ -13,7 +13,8 @@ On a real deployment the source line changes to
 bifrost_spark/sources/kafka_formats.py; everything downstream is identical.
 
 Ordering: the file source does NOT guarantee event-log chunk order, so the
-engine runs with ``ordered=False`` — correctness comes from the commutative
+engine always runs with ``ordered=False`` (a high-water-mark skip would drop
+older events a later file delivers) — correctness comes from the commutative
 tombstone/guard MERGE + manifests, not from a high-water-mark skip.  DML is
 safe in any batch order; DDL events are assumed in-order relative to the DML
 they affect (a Kafka source with a single control partition, or the chunked
@@ -39,13 +40,12 @@ def start_cdc_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    ordered: bool = False,
     auto_compact_snapshots: int | None = None,
     query_name: str | None = None,
 ) -> StreamingQuery:
     """Start the stream; every commit it makes leaves its record in the
     table's ``lineage()``, written by the commit itself."""
-    engine = ReplayEngine(table, ordered=ordered,
+    engine = ReplayEngine(table, ordered=False,
                           auto_compact_snapshots=auto_compact_snapshots)
     # NB: StructType.add mutates in place — build a copy, never touch the
     # shared EVENT_SCHEMA.

@@ -181,6 +181,26 @@ def test_cli_status_json(spark, tmp_path, capsys):
     assert sum(r["n_ops"] for r in out["recent"]) > 0 and out["events_per_s"] > 0
 
 
+def test_cli_status_counts_every_commit(spark, tmp_path, capsys, monkeypatch):
+    """``status`` reports every commit, also once the manifest's id tail
+    is full, and the registry's schema version."""
+    from bifrost_spark import cli
+    from bifrost_spark.operators import merge
+
+    monkeypatch.setattr(merge, "APPLIED_TAIL", 2)
+    tbl = str(tmp_path / "tbl")
+    t = TargetTable.create(spark, tbl, n_buckets=2)
+    for i in range(5):
+        t.apply_ddl(f"ALTER TABLE code.repos ADD COLUMN c{i} INT",
+                    batch_id=f"ddl:{2 * i + 1}", event_id=2 * i + 1)
+    capsys.readouterr()
+    cli.main(["status", "--table", tbl])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["applied_batches"] == len(t.lineage()) == 5
+    assert out["schema_version"] == t.registry.current_version == 5
+    assert t.applied_batch_ids == {"ddl:7", "ddl:9"}
+
+
 def test_fused_lineage_bucket_rows(spark, tmp_path):
     """Every apply records, on its commit entry, the rows it wrote and the
     buckets it rewrote."""
@@ -234,7 +254,7 @@ def test_auto_compact_during_replay(spark, tmp_path):
     assert content_sha_map(expected) == content_sha_map(actual)
     # tombstones below the high-water mark were GCed by the last compact
     n_tombs = t.read(include_deleted=True).filter("is_deleted").count()
-    applied_compacts = [a for a in t.state["applied"] if a["kind"] == "compact"]
+    applied_compacts = [a for a in t.lineage() if a["kind"] == "compact"]
     assert applied_compacts and applied_compacts[-1]["tombstone_lwm"] > 0
     assert n_tombs < events.filter("event_type = 'delete'").count()
 

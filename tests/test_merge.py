@@ -2,16 +2,19 @@
 bucket pruning, bootstrap."""
 
 import datetime
+import json
+import os
 
 import pyspark.sql.functions as F
 import pytest
 
 from bifrost_spark.operators import merge
+from bifrost_spark.operators.lww import OP_PAYLOAD, events_to_ops
 from bifrost_spark.operators.merge import TargetTable, bucket_expr
 from bifrost_spark.oracle import content_sha_map, sequential_apply
 from bifrost_spark.pipelines.replay import ReplayEngine
 from bifrost_spark.registry import SchemaRegistry
-from bifrost_spark.schemas import EVENT_SCHEMA
+from bifrost_spark.schemas import EVENT_SCHEMA, PK_COLUMNS
 
 
 def _resolved(spark, rows):
@@ -58,7 +61,7 @@ def test_merge_idempotent_replay(spark, table):
     table.merge(src, batch_id="b1", batch_range=(2, 2))
     out = table.merge(src, batch_id="b1", batch_range=(2, 2))
     assert out["skipped"] is True
-    assert len(table.state["applied"]) == 1
+    assert table.state["applied_ids"] == ["b1"] and len(table.lineage()) == 1
 
 
 def test_event_id_guard_on_overlapping_replay(spark, table):
@@ -149,8 +152,8 @@ def test_manifest_lineage_metrics(spark, table):
     res = table.merge(_resolved(spark, [("r", "a", "upsert", "c1", "py", "v1", None, 2),
                                         ("r", "b", "delete", None, None, None, None, 4)]),
                       batch_id="b1", batch_range=(2, 4))
-    entry = table.state["applied"][-1]
-    assert table.lineage() == [entry]
+    (entry,) = table.lineage()
+    assert table.state["applied_ids"] == [entry["batch_id"]] == ["b1"]
     assert entry["kind"] == "merge" and entry["n_ops"] == 2
     # the delete of an absent key still lands, as a tombstone
     assert (entry["rows_out"], entry["tombstones"]) == (2, 1)
@@ -301,6 +304,26 @@ def test_fused_prelww_knob_equal_state(spark, tmp_path):
     assert s_default == s_auto == s_even
 
 
+def test_prelww_on_ops_without_schema_version(spark, table):
+    """A caller's ops frame carries only the op columns (no
+    ``schema_version``): a hot-key batch still arms the map-side pre-LWW
+    combine, and the state equals the sequential oracle."""
+    rows = [(2, "insert", None, ("r", "hot", "v0"))]
+    rows += [(2 + 2 * i, "update", ("r", "hot", f"v{i - 1}"), ("r", "hot", f"v{i}"))
+             for i in range(1, 40)]
+    rows += [(100, "insert", None, ("r", "k0", "a")), (102, "insert", None, ("r", "k1", "b")),
+             (104, "delete", ("r", "k1", "b"), None)]
+    events = _events(spark, rows)
+    ops = events_to_ops(events).select("event_id", "op", *PK_COLUMNS, *OP_PAYLOAD, "seq")
+    assert len(rows) >= merge.PRELWW_RATIO * 3  # 43 ops on 3 keys
+    res = table.apply_ops(ops, batch_id="hot", batch_range=(2, 104))
+    assert res["pre_lww"]
+    expected = sequential_apply(events.toPandas())
+    actual = table.to_pandas_sorted().reset_index(drop=True)
+    assert content_sha_map(actual) == content_sha_map(expected)
+    assert expected.equals(actual[expected.columns.tolist()])
+
+
 def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
     """The commit manifest must stay O(1) over many ordered batches (merged
     interval set), and replay-skip must survive batch ids aging out of the
@@ -314,8 +337,8 @@ def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
         )
     # contiguous ordered ranges collapse to ONE interval; tail is bounded
     assert table.state["applied_ranges"] == [[2, 25]]
-    assert len(table.state["applied"]) == 2
-    assert table.state["n_commits"] == 6
+    assert table.state["applied_ids"] == ["b4", "b5"]
+    assert len(table.lineage()) == 6
     # b0 aged out of the tail but its range is covered -> still skipped
     assert "b0" not in table.applied_batch_ids
     out = table.merge(
@@ -325,6 +348,40 @@ def test_applied_ranges_stay_compact_and_skip_replay(spark, table, monkeypatch):
     assert out["skipped"] is True
     # without range-exclusive delivery the same check must NOT skip
     assert not table.is_applied("other", (2, 5), range_exclusive=False)
+
+
+def test_manifest_keeps_ids_not_entries(spark, table):
+    """The manifest keeps a bounded tail of batch ids, not commit entries:
+    over 300 commits that each carry a ~1 KB field it stays small and
+    lacks the keys other records hold, while ``lineage()`` keeps every full
+    entry.  A manifest written with the full-entry tail (``applied``)
+    still opens and still skips a batch id from that tail."""
+    pad = "x" * 1024
+    for i in range(300):
+        table._commit(dict(table.state), {"batch_id": f"b{i}", "kind": "noop", "pad": pad})
+    last = os.path.join(table.path, "_state", f"{table.state['snapshot']}.json")
+    assert os.path.getsize(last) < 32 * 1024
+    st = json.loads(open(last).read())
+    assert not {"applied", "schema_version", "n_commits"} & set(st)
+    assert st["applied_ids"] == [f"b{i}" for i in range(300 - merge.APPLIED_TAIL, 300)]
+    recs = table.lineage()
+    assert [r["batch_id"] for r in recs] == [f"b{i}" for i in range(300)]
+    assert all(r["pad"] == pad for r in recs)
+
+    # the same table as the full-entry layout wrote it
+    legacy = {k: v for k, v in st.items() if k != "applied_ids"}
+    legacy.update(snapshot="v00000301", schema_version=0, n_commits=301,
+                  applied=[{"batch_id": b, "kind": "noop", "pad": pad} for b in st["applied_ids"]])
+    TargetTable._write_snapshot(table._fs, table.path, legacy)
+    old = TargetTable(spark, table.path)
+    out = old.merge(_resolved(spark, [("r", "a", "upsert", "c", "py", "v", None, 2)]),
+                    batch_id="b299", batch_range=(2, 2))
+    assert out["skipped"] is True and old.read().count() == 0
+    old._commit(dict(old.state), {"batch_id": "b300", "kind": "noop"})
+    st = json.loads(open(os.path.join(table.path, "_state", "v00000302.json")).read())
+    assert not {"applied", "schema_version", "n_commits"} & set(st)
+    assert st["applied_ids"][-2:] == ["b299", "b300"]
+    assert len(st["applied_ids"]) == merge.APPLIED_TAIL
 
 
 def _events(spark, rows):

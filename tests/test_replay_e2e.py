@@ -80,9 +80,9 @@ def test_kill_resume_and_double_replay(spark, fixtures, tmp_path):
     assert skipped, "expected committed chunks to be skipped on resume"
     _assert_matches_oracle(table2, fixtures["expected"])
     # a full third replay is a complete no-op
-    n_applied = len(table2.state["applied"])
+    n_applied = len(table2.lineage())
     replay_event_log(spark, fixtures["log"], TargetTable(spark, p))
-    assert len(TargetTable(spark, p).state["applied"]) == n_applied
+    assert len(TargetTable(spark, p).lineage()) == n_applied
 
 
 def test_oracle_self_check(fixtures):
@@ -144,7 +144,7 @@ def test_ddl_barrier_fold(spark, tmp_path):
     t = TargetTable.create(spark, str(tmp_path / "tbl_fold"), n_buckets=4)
     replay_event_log(spark, log, t)
     assert content_sha_map(t.to_pandas_sorted().reset_index(drop=True)) == content_sha_map(expected)
-    merged = [a for a in t.state["applied"] if a["kind"].startswith("merge")]
+    merged = [a for a in t.lineage() if a["kind"].startswith("merge")]
     assert len(merged) == 4  # one merge cycle per chunk: the DDL split none
 
     # deferred-lwm crash safety: apply only the DDL, then reopen — the
@@ -154,4 +154,4 @@ def test_ddl_barrier_fold(spark, tmp_path):
     t2.apply_ddl("ALTER TABLE code.repos ADD COLUMN stars INT",
                  batch_id="ddl:4003", event_id=4003, defer_lwm=True)
     assert t2.last_event_id == before  # not advanced past unapplied data
-    assert t2.state["schema_version"] == 1  # but the schema DID evolve
+    assert t2.registry.current_version == 1  # but the schema DID evolve

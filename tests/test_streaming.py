@@ -33,7 +33,7 @@ def test_streaming_replay_and_checkpoint_wipe(spark, tmp_path):
     # column values must survive in the rows' extra map (regression: they
     # used to be silently dropped, visible only off the sha'd columns).
     assert expected.equals(actual[expected.columns.tolist()])
-    n_applied = len(table.state["applied"])
+    n_applied = len(table.lineage())
 
     # wipe the checkpoint → Spark replays ALL files with the SAME slicing:
     # every batch_id repeats → manifest skips, zero new commits
@@ -41,7 +41,7 @@ def test_streaming_replay_and_checkpoint_wipe(spark, tmp_path):
     q2.awaitTermination(300)
     table = TargetTable(spark, table.path)
     assert content_sha_map(table.to_pandas_sorted()) == content_sha_map(expected)
-    assert len(table.state["applied"]) == n_applied  # zero new commits
+    assert len(table.lineage()) == n_applied  # zero new commits
 
     # replay again with DIFFERENT slicing (batch_ids differ → re-merge):
     # the commutative tombstone/guard merge keeps the state identical

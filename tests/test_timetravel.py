@@ -87,4 +87,4 @@ def test_time_travel_mutations_raise_at_entry(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="read-only"):
             call()
     assert sorted(os.listdir(data_dir)) == before  # no orphan snapshot dirs
-    assert old.registry.current_version == 0 and old.state["schema_version"] == 0
+    assert old.registry.current_version == 0 and "schema_version" not in old.state
